@@ -2798,8 +2798,11 @@ def _concordance_counts(pts):
 
     # ---- sparse closed forms for ties ------------------------------
     # n = sum of the cached cell counts (== count(*) over pts, exact
-    # integers) — avoids a second full scan of the raw points
-    nn = cnt.agg(F.sum("c").cast("decimal(38,0)").alias("n"))
+    # integers) — avoids a second full scan of the raw points; 0, not
+    # NULL, over an empty relation, as COUNT(*) gives
+    nn = cnt.agg(
+        F.coalesce(F.sum("c"), F.lit(0)).cast("decimal(38,0)").alias("n")
+    )
     tot = cnt.groupBy("v").agg(F.sum("c").cast("long").alias("tv"))
     t1 = tot.agg(
         (

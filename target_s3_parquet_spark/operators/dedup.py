@@ -76,12 +76,6 @@ def text_exact_dedup_rows(spark, sf_dir):
     )
 
 
-def _word_set(col):
-    """Distinct lowercase word set of a text column (shared by the
-    Jaccard verifiers)."""
-    return F.array_distinct(F.split(F.lower(col), " "))
-
-
 # ---------------------------------------------------------------------------
 # MinHash + LSH banding
 # ---------------------------------------------------------------------------

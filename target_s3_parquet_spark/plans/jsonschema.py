@@ -136,29 +136,31 @@ def _stringify_array(col: Column, elem_type: T.DataType) -> Column:
 
 
 def flatten_columns(
-    dtype: T.StructType, parent: str = "", sep: str = SEP, compat: bool = False
+    dtype: T.StructType, parent: tuple[str, ...] = (), sep: str = SEP, compat: bool = False
 ) -> list[Column]:
     """Projection list that flattens a (possibly nested) StructType into
     ``parent__child`` leaf columns — the record half of the reference's
     flatten (``utils.py:34-62``) as a pure Catalyst ``select``: runs in
     whole-stage codegen, costs no shuffle, and column pruning still
-    reaches through it."""
+    reaches through it. Fields are addressed by name, never by a dotted
+    path string, so a key such as ``a.b`` stays one column named
+    ``a.b``, as in the reference."""
     cols: list[Column] = []
     for field in dtype.fields:
-        path = f"{parent}.{field.name}" if parent else field.name
-        name = path.replace(".", sep)
+        path = (*parent, field.name)
         if isinstance(field.dataType, T.StructType):
             cols.extend(flatten_columns(field.dataType, path, sep, compat))
-        elif isinstance(field.dataType, T.ArrayType) and compat:
-            cols.append(
-                _stringify_array(F.col(path), field.dataType.elementType).alias(name)
-            )
-        else:
-            cols.append(F.col(path).alias(name))
+            continue
+        col = F.col("`%s`" % path[0].replace("`", "``"))
+        for name in path[1:]:
+            col = col.getField(name)
+        if isinstance(field.dataType, T.ArrayType) and compat:
+            col = _stringify_array(col, field.dataType.elementType)
+        cols.append(col.alias(sep.join(path)))
     return cols
 
 
 def flatten_df(df: DataFrame, sep: str = SEP, compat: bool = False) -> DataFrame:
     """Flatten every nested struct column of ``df`` into top-level
     ``parent__child`` columns."""
-    return df.select(*flatten_columns(df.schema, "", sep, compat))
+    return df.select(*flatten_columns(df.schema, (), sep, compat))

@@ -14,12 +14,20 @@ executors. The per-contiguous-run buffering (R8) becomes
 ``partitionBy(stream)``: order-independent, no small-file explosion on
 interleaved streams.
 
+Each line is parsed exactly once: one ``from_json`` yields the envelope,
+the raw JSON text of the record/schema/state payloads and the
+corrupt-line flag. One ``(type, stream)`` aggregate over the parsed log
+is the whole control plane (plans, final STATE, activations, the
+record-before-schema guard), shared by the batch and streaming paths.
+
 Validation (R4): the baked-in image has no ``jsonschema`` package, so
 the Draft4 subset that matters for tabular data (type, required,
 nullability, maxLength, min/max) is compiled to native ``when``-checks
-— vectorized, codegen'd, and scalable; rows failing in strict mode
-raise (like the reference), in permissive mode they're quarantined to
-an error column.
+over ONE map parse of each record (key presence for ``required``, the
+raw text of each property for the rest) — vectorized, codegen'd, and
+linear in the number of checks; rows failing in strict mode raise
+(like the reference), in permissive mode they're quarantined to an
+error column.
 """
 
 from __future__ import annotations
@@ -28,7 +36,7 @@ import json
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -51,6 +59,10 @@ ENVELOPE = T.StructType(
         T.StructField("version", T.LongType()),
     ]
 )
+# the line parse: the envelope plus Spark's corrupt-record column, set
+# whenever the line is not a JSON object or a field has the wrong type
+_LINE = T.StructType([*ENVELOPE.fields, T.StructField("_corrupt_record", T.StringType())])
+_RECORD_MAP = T.MapType(T.StringType(), T.StringType())
 
 
 class SingerError(ValueError):
@@ -76,61 +88,96 @@ class StreamPlan:
 
 def read_message_log(spark: SparkSession, path: str) -> DataFrame:
     """R1+R2: read line-delimited Singer messages as a DataFrame with the
-    envelope parsed. Malformed JSON lines are detected (null parse of a
-    non-null line) and surfaced as ``_corrupt`` for the caller to raise
-    on — same hard-error contract as ``singer.parse_message`` raising."""
+    envelope parsed. Malformed lines are surfaced as ``_corrupt`` (see
+    ``parse_message_lines``) for the caller to raise on — same
+    hard-error contract as ``singer.parse_message`` raising."""
     raw = spark.read.text(path)
     return parse_message_lines(raw)
 
 
 def parse_message_lines(raw: DataFrame, line_col: str = "value") -> DataFrame:
-    """R2+R3 prep: parse each text line into the envelope; keep the raw
-    record/schema payloads as JSON strings (schema applied later,
-    per-stream)."""
+    """R2+R3 prep: parse each text line into the envelope with ONE
+    ``from_json``. ``record``, ``schema`` and ``value`` are STRING in
+    the envelope, so the parse itself returns their raw JSON text
+    (schema applied later, per-stream).
+
+    A non-blank line is ``_corrupt`` when the parse sets the corrupt-
+    record column (not a JSON object, or an envelope field of the wrong
+    type such as a non-integer ``version``) or the object carries no
+    envelope ``type`` (a bare number or string is valid JSON yet not a
+    Singer message — the reference's ``singer.parse_message`` raises on
+    any such line, so silently dropping it would diverge). Repeated
+    keys are not corrupt: like ``json.loads``, the last one wins."""
     line = F.col(line_col)
-    env = F.from_json(
+    m = F.from_json(
         line,
-        ENVELOPE,
-        {"mode": "PERMISSIVE"},
+        _LINE,
+        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
     )
-    parsed = raw.select(
-        line.alias("_raw"),
-        env.alias("m"),
-        F.get_json_object(line, "$.record").alias("_record_json"),
-        F.get_json_object(line, "$.schema").alias("_schema_json"),
-        F.get_json_object(line, "$.value").alias("_state_json"),
-        # a non-blank line is corrupt when its JSON parse yields nothing
-        # OR it parses but carries no envelope "type" (a bare number or
-        # string is valid JSON yet not a Singer message — the reference's
-        # singer.parse_message raises on any such line, so silently
-        # dropping it would diverge)
+    return raw.select(line.alias("_raw"), m.alias("m")).select(
+        "_raw",
+        "m.type",
+        "m.stream",
+        F.col("m.record").alias("record_json"),
+        F.col("m.schema").alias("schema_json"),
+        F.col("m.value").alias("state_json"),
+        "m.key_properties",
+        "m.time_extracted",
+        "m.version",
         (
-            (F.length(F.trim(line)) > 0)
-            & (F.try_parse_json(line).isNull() | env["type"].isNull())
+            (F.length(F.trim("_raw")) > 0)
+            & (F.col("m._corrupt_record").isNotNull() | F.col("m.type").isNull())
         ).alias("_corrupt"),
     )
-    return parsed.select(
-        "_raw",
-        F.col("m.type").alias("type"),
-        F.col("m.stream").alias("stream"),
-        F.col("_record_json").alias("record_json"),
-        F.col("_schema_json").alias("schema_json"),
-        F.col("_state_json").alias("state_json"),
-        F.col("m.key_properties").alias("key_properties"),
-        F.col("m.time_extracted").alias("time_extracted"),
-        F.col("m.version").alias("version"),
-        "_corrupt",
+
+
+def control_plane_rows(messages: DataFrame) -> list[Row]:
+    """The one control-plane aggregate: a row per (type, stream) with its
+    first/last line, the last schema/state/key_properties/version and
+    whether any of its lines is corrupt. O(types x streams) rows reach
+    the driver, never O(records); every control-plane reader (plans,
+    final STATE, activations, streaming schema changes) derives from
+    these rows."""
+    return (
+        messages.withColumn("_line", F.monotonically_increasing_id())
+        .groupBy("type", "stream")
+        .agg(
+            F.min("_line").alias("first_line"),
+            F.max("_line").alias("last_line"),
+            F.max_by("schema_json", "_line").alias("schema_json"),
+            F.max_by("state_json", "_line").alias("state_json"),
+            F.max_by("key_properties", "_line").alias("key_properties"),
+            F.max_by("version", "_line").alias("version"),
+            F.max(F.col("_corrupt").cast("int")).alias("corrupt"),
+        )
+        .collect()
     )
+
+
+def final_state(rows: list[Row]) -> str | None:
+    """R13: the value of the log's last STATE message."""
+    states = [r for r in rows if r["type"] == "STATE"]
+    return max(states, key=lambda r: r["last_line"])["state_json"] if states else None
+
+
+def activations_from(rows: list[Row]) -> dict[str, int]:
+    """L5: the last ACTIVATE_VERSION's version per stream."""
+    return {
+        r["stream"]: int(r["version"])
+        for r in rows
+        if r["type"] == "ACTIVATE_VERSION"
+        and r["stream"] is not None
+        and r["version"] is not None
+    }
 
 
 def collect_control_plane(messages: DataFrame) -> tuple[dict[str, StreamPlan], str | None, list[str]]:
-    """Driver-side pass over the *control* messages only (SCHEMA/STATE —
-    O(streams + bookmarks), never O(records)): build per-stream plans
-    and find the final STATE value (R13: only the last one matters).
+    """Driver-side control plane from the one ``(type, stream)``
+    aggregate: build per-stream plans and find the final STATE value
+    (R13: only the last one matters).
 
-    Returns (plans, last_state_json, message_type_order) where
-    message_type_order preserves first-seen line order per stream for
-    the record-before-schema guard (R5).
+    Returns (plans, last_state_json, stream_names); a corrupt line or a
+    RECORD before its stream's first SCHEMA (R5) raises.
 
     Schema-evolution policy (SURVEY hard part #4): the reference
     validates each record under the schema in force at its log
@@ -141,36 +188,13 @@ def collect_control_plane(messages: DataFrame) -> tuple[dict[str, StreamPlan], s
     boundary (the streaming path surfaces exactly this via
     ``SingerStreamJob.observed_schema_changes`` and restarts).
     """
-    ctl = (
-        messages.withColumn("_line", F.monotonically_increasing_id())
-        .filter(
-            F.col("_corrupt")
-            | F.col("type").isin("SCHEMA", "STATE")
-            | (
-                (F.col("type") == "RECORD")
-                & F.col("stream").isNotNull()
-            )
-        )
-        # for RECORDs we only need the first line number per stream
-        .groupBy("type", "stream")
-        .agg(
-            F.min("_line").alias("first_line"),
-            F.max("_line").alias("last_line"),
-            F.max_by("schema_json", "_line").alias("schema_json"),
-            F.max_by("state_json", "_line").alias("state_json"),
-            F.max_by("key_properties", "_line").alias("key_properties"),
-            F.max(F.col("_corrupt").cast("int")).alias("corrupt"),
-        )
-        .collect()
-    )
-    if any(r["corrupt"] for r in ctl):
+    rows = control_plane_rows(messages)
+    if any(r["corrupt"] for r in rows):
         raise SingerError("invalid JSON in message log")
 
     plans: dict[str, StreamPlan] = {}
-    first_record_line: dict[str, int] = {}
     first_schema_line: dict[str, int] = {}
-    last_state, last_state_line = None, -1
-    for r in ctl:
+    for r in rows:
         if r["type"] == "SCHEMA" and r["stream"]:
             # later SCHEMAs replace earlier ones (reference __init__.py:241)
             plans[r["stream"]] = StreamPlan(
@@ -179,74 +203,76 @@ def collect_control_plane(messages: DataFrame) -> tuple[dict[str, StreamPlan], s
                 key_properties=list(r["key_properties"] or []),
             )
             first_schema_line[r["stream"]] = r["first_line"]
-        elif r["type"] == "RECORD" and r["stream"]:
-            first_record_line[r["stream"]] = r["first_line"]
-        elif r["type"] == "STATE":
-            if r["last_line"] > last_state_line:
-                last_state, last_state_line = r["state_json"], r["last_line"]
 
     # R5: RECORD before its stream's SCHEMA is a hard error.
-    for stream, rline in first_record_line.items():
-        sline = first_schema_line.get(stream)
-        if sline is None or rline < sline:
-            raise SingerError(
-                f"A record for stream {stream} was encountered "
-                f"before a corresponding schema"
-            )
-    return plans, last_state, list(plans)
+    for r in rows:
+        if r["type"] == "RECORD" and r["stream"]:
+            sline = first_schema_line.get(r["stream"])
+            if sline is None or r["first_line"] < sline:
+                raise SingerError(
+                    f"A record for stream {r['stream']} was encountered "
+                    f"before a corresponding schema"
+                )
+    return plans, final_state(rows), list(plans)
 
 
-def _compile_validators(plan: StreamPlan, rec: Column) -> list[tuple[str, Column]]:
+def _compile_validators(
+    plan: StreamPlan, m: Column, keys: Column, vals: Column
+) -> list[tuple[str, Column]]:
     """R4 as native checks: compile the Draft4 subset into Columns that
-    are true when the record VIOLATES the constraint."""
+    are true when the record VIOLATES the constraint, all reading ONE
+    ``MAP<STRING,STRING>`` parse of the record (``m``; ``keys`` and
+    ``vals`` are its keys and values in reverse order): key presence
+    for ``required``, each property's raw JSON text for the rest. Map
+    keys are matched verbatim, so a property named ``a.b`` is that key,
+    not a path. Numbers are read with ``try_cast`` so a malformed value
+    is a violation, not a cast error, in either SQL mode."""
     checks: list[tuple[str, Column]] = []
     props = plan.json_schema.get("properties") or {}
     required = plan.json_schema.get("required") or []
     for name in required:
         # Draft4 'required' asserts key PRESENCE — an explicit JSON null
-        # satisfies it when the type allows null. get_json_object cannot
-        # distinguish missing from null (both return NULL), so check the
-        # object's key set instead; a record that isn't a JSON object at
-        # all (json_object_keys → NULL) also violates.
+        # satisfies it when the type allows null; a record that isn't a
+        # JSON object at all (NULL map) also violates.
         checks.append(
             (
                 f"required:{name}",
-                ~F.coalesce(
-                    F.array_contains(F.json_object_keys(rec), F.lit(name)),
-                    F.lit(False),
-                ),
+                ~F.coalesce(F.map_contains_key(m, F.lit(name)), F.lit(False)),
             )
         )
     for name, prop in props.items():
-        raw = F.get_json_object(rec, f"$.{name}")
+        # like json.loads, the LAST of repeated keys wins (element_at
+        # would return the first), hence the lookup from the end
+        i = F.array_position(keys, F.lit(name)).cast("int")
+        raw = F.when(i > 0, F.element_at(vals, i))
         jt = prop.get("type")
         types = [jt] if isinstance(jt, str) else list(jt or [])
         if "integer" in types:
             checks.append(
                 (
                     f"type:{name}:integer",
-                    raw.isNotNull() & raw.cast("long").isNull(),
+                    raw.isNotNull() & raw.try_cast("long").isNull(),
                 )
             )
             if prop.get("maximum") is not None:
                 checks.append(
                     (
                         f"max:{name}",
-                        raw.cast("long") > F.lit(int(prop["maximum"])),
+                        raw.try_cast("long") > F.lit(int(prop["maximum"])),
                     )
                 )
             if prop.get("minimum") is not None:
                 checks.append(
                     (
                         f"min:{name}",
-                        raw.cast("long") < F.lit(int(prop["minimum"])),
+                        raw.try_cast("long") < F.lit(int(prop["minimum"])),
                     )
                 )
         elif "number" in types:
             checks.append(
                 (
                     f"type:{name}:number",
-                    raw.isNotNull() & raw.cast("double").isNull(),
+                    raw.isNotNull() & raw.try_cast("double").isNull(),
                 )
             )
         if "string" in types and prop.get("maxLength") is not None:
@@ -284,10 +310,22 @@ def records_for_stream(
     )
     rec = F.col("record_json")
 
-    err: Column = F.lit(None).cast("string")
+    checks = []
     if validate != "none":
-        for label, bad in _compile_validators(plan, rec):
-            err = F.when(err.isNotNull(), err).when(bad, F.lit(label))
+        # the map parse and its reversed keys/values are projected ONCE
+        # ahead of the checks; inline, Spark would evaluate them again in
+        # every check
+        recs = recs.withColumn("_m", F.from_json(rec, _RECORD_MAP)).withColumns(
+            {"_k": F.reverse(F.map_keys("_m")), "_v": F.reverse(F.map_values("_m"))}
+        )
+        checks = _compile_validators(plan, F.col("_m"), F.col("_k"), F.col("_v"))
+    # the first failing check's label: one flat coalesce, linear in the
+    # number of checks
+    err = (
+        F.coalesce(*[F.when(bad, F.lit(label)) for label, bad in checks])
+        if checks
+        else F.lit(None).cast("string")
+    )
     version_cols = (
         [F.col("version").cast("long").alias("_sdc_table_version")]
         if with_version
@@ -309,7 +347,7 @@ def records_for_stream(
                         F.lit(f"validation failed for stream {plan.stream}: "),
                         F.col("_validation_error"),
                     )
-                ).cast(plan.struct.simpleString()),
+                ).cast(plan.struct),
             ).otherwise(F.col("r")),
         )
 
@@ -342,18 +380,9 @@ def records_for_stream(
 def collect_activations(messages: DataFrame) -> dict[str, int]:
     """L5: last ACTIVATE_VERSION per stream (reference `__init__.py:
     144-145` logs-and-drops these; SURVEY §2A maps L5 to version-column
-    + dynamic partition overwrite, which the sink implements). A
-    control-plane collect: O(streams)."""
-    rows = (
-        messages.withColumn("_line", F.monotonically_increasing_id())
-        .filter(
-            (F.col("type") == "ACTIVATE_VERSION") & F.col("stream").isNotNull()
-        )
-        .groupBy("stream")
-        .agg(F.max_by("version", "_line").alias("version"))
-        .collect()
-    )
-    return {r["stream"]: int(r["version"]) for r in rows if r["version"] is not None}
+    + dynamic partition overwrite, which the sink implements), read off
+    the control-plane aggregate: O(streams)."""
+    return activations_from(control_plane_rows(messages))
 
 
 def ingest(

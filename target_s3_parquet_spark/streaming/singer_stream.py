@@ -28,6 +28,9 @@ from pyspark.sql import functions as F
 
 from target_s3_parquet_spark.sources.singer import (
     StreamPlan,
+    activations_from,
+    control_plane_rows,
+    final_state,
     parse_message_lines,
     records_for_stream,
 )
@@ -59,14 +62,13 @@ class SingerStreamJob:
     observed_schema_changes: list[str] = field(default_factory=list)
 
     def _process_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        from target_s3_parquet_spark.sources.singer import collect_activations
-
         messages = parse_message_lines(batch)
         messages.cache()
         try:
-            activations = (
-                collect_activations(messages) if self.activate_version else {}
-            )
+            # control plane: ONE O(types x streams) collect per epoch
+            # serves activations, the final STATE and schema changes
+            control = control_plane_rows(messages)
+            activations = activations_from(control) if self.activate_version else {}
             # data plane: every known stream, one partitioned write
             for stream, plan in self.plans.items():
                 flat = records_for_stream(
@@ -99,15 +101,9 @@ class SingerStreamJob:
                     .partitionBy("stream")
                     .parquet(self.output_path)
                 )
-            # control plane: record the epoch's final STATE *after* the
-            # writes above committed (R13 ordering)
-            states = (
-                messages.withColumn("_line", F.monotonically_increasing_id())
-                .filter((F.col("type") == "STATE") & F.col("state_json").isNotNull())
-                .agg(F.max_by("state_json", "_line").alias("s"))
-                .collect()
-            )
-            state_val = states[0]["s"] if states else None
+            # record the epoch's final STATE *after* the writes above
+            # committed (R13 ordering)
+            state_val = final_state(control)
             if state_val is not None and self.state_dir:
                 os.makedirs(self.state_dir, exist_ok=True)
                 with open(
@@ -119,19 +115,11 @@ class SingerStreamJob:
             # payload differs from the plan in force — the latter is the
             # actual evolution case (new columns would otherwise keep
             # parsing under the stale plan and be silently dropped).
-            # Control-plane collect: O(streams), never O(records).
-            schema_rows = (
-                messages.withColumn("_line", F.monotonically_increasing_id())
-                .filter((F.col("type") == "SCHEMA") & F.col("stream").isNotNull())
-                .groupBy("stream")
-                .agg(F.max_by("schema_json", "_line").alias("schema_json"))
-                .collect()
-            )
-            for r in schema_rows:
+            for r in control:
+                if r["type"] != "SCHEMA" or r["stream"] is None:
+                    continue
                 plan = self.plans.get(r["stream"])
-                if plan is None:
-                    self.observed_schema_changes.append(r["stream"])
-                elif json.loads(r["schema_json"] or "{}") != plan.json_schema:
+                if plan is None or json.loads(r["schema_json"] or "{}") != plan.json_schema:
                     self.observed_schema_changes.append(r["stream"])
         finally:
             messages.unpersist()
@@ -168,32 +156,3 @@ def plans_from_log_head(spark: SparkSession, log_dir: str) -> dict[str, StreamPl
     messages = parse_message_lines(spark.read.text(os.path.join(log_dir, "*")))
     plans, _, _ = collect_control_plane(messages)
     return plans
-
-
-def run_singer_stream_to_completion(
-    spark: SparkSession,
-    log_dir: str,
-    output_path: str,
-    checkpoint_path: str,
-    state_dir: str,
-    **job_kw,
-) -> tuple[DataFrame, str | None]:
-    """Convenience: bootstrap plans, run until the log is drained, stop,
-    return (written data, final bookmark)."""
-    plans = plans_from_log_head(spark, log_dir)
-    job = SingerStreamJob(
-        plans=plans,
-        output_path=output_path,
-        checkpoint_path=checkpoint_path,
-        state_dir=state_dir,
-        **job_kw,
-    )
-    from target_s3_parquet_spark.streaming.replay import stream_conf
-
-    with stream_conf(spark):
-        q = job.start(spark, log_dir)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.read.parquet(output_path), latest_state(state_dir)

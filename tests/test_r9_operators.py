@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
+
 
 def test_reservoir_fold_idempotent_under_redelivery(spark):
     """ADVICE r8: re-applying an already-merged batch must leave the
@@ -226,6 +228,42 @@ def test_concordance_stats_match_bruteforce(spark, tmp_path):
     )
     assert abs(got.somers_d_price - (c - d) / untied_v) < 1e-12
     assert abs(got.somers_d_qty - (c - d) / untied_g) < 1e-12
+
+
+@pytest.mark.parametrize(
+    "key", ["agg_corr_kendall_tau", "agg_corr_concordance_stats"]
+)
+def test_concordance_keys_on_empty_lineitem_match_oracle(spark, tmp_path, key):
+    """Degenerate input: over an empty relation n_rows is COUNT(*) = 0,
+    not NULL, and every pair statistic is NULL, exactly as the DuckDB
+    oracle computes them."""
+    import os
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from target_s3_parquet_spark.registry import get_oracles, get_queries
+    from tools.check_correctness import frame_hash
+
+    sf = str(tmp_path / "sf_empty")
+    os.makedirs(sf)
+    path = os.path.join(sf, "lineitem.parquet")
+    pq.write_table(
+        pa.table(
+            {"l_quantity": pa.array([], pa.float64()),
+             "l_extendedprice": pa.array([], pa.float64())}
+        ),
+        path,
+    )
+    got = get_queries()[key](spark, sf).toPandas()
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW lineitem AS SELECT * FROM read_parquet('{path}')")
+    want = con.sql(get_oracles()[key]).df()
+    assert len(got) == len(want) == 1
+    assert got["n_rows"].tolist() == [0]
+    assert sorted(got.columns) == sorted(want.columns)
+    assert frame_hash(got) == frame_hash(want)
 
 
 def test_tau_within_kernel_exact_past_int64_product_range():

@@ -233,3 +233,82 @@ def test_non_message_json_line_is_corrupt(spark, tmp_path):
 
     with _pytest.raises(SingerError):
         _ingest(spark, fx.write_log(str(tmp_path), lines))
+
+
+def _raw_log(tmp_path, name, schema, records):
+    """A log whose RECORD lines are written verbatim (json.dumps cannot
+    emit repeated keys)."""
+    lines = [fx._msg(type="SCHEMA", stream="s", schema=schema, key_properties=[])]
+    lines += ['{"type": "RECORD", "stream": "s", "record": %s}' % r for r in records]
+    return fx.write_log(str(tmp_path), lines, name)
+
+
+def test_dotted_property_name_is_a_key_not_a_path(spark, tmp_path):
+    """A property named ``a.b`` is the record key "a.b"; a JSON-path
+    lookup would read the nested path a -> b, miss, and let a bad value
+    through."""
+    schema = {"type": "object", "properties": {"a.b": {"type": "integer"}}}
+    p = _raw_log(tmp_path, "dotted.jsonl", schema, ['{"a.b": "x"}'])
+    streams, _ = _ingest(spark, p, validate="strict")
+    with pytest.raises(Exception, match="validation failed"):
+        streams["s"].collect()
+    streams, _ = _ingest(spark, p, validate="permissive")
+    assert [r["_validation_error"] for r in streams["s"].collect()] == [
+        "type:a.b:integer"
+    ]
+
+
+def test_repeated_key_is_validated_on_its_last_value(spark, tmp_path):
+    """Like the reference's json.loads, the last of repeated keys wins,
+    in validation as in the typed record."""
+    schema = {
+        "type": "object",
+        "properties": {"id": {"type": ["null", "integer"]}},
+        "required": ["id"],
+    }
+    ok = _raw_log(tmp_path, "ok.jsonl", schema, ['{"id": "x", "id": 1}'])
+    streams, _ = _ingest(spark, ok, validate="strict")
+    assert [r["id"] for r in streams["s"].collect()] == [1]
+
+    bad = _raw_log(tmp_path, "bad.jsonl", schema, ['{"id": 2, "id": "x"}'])
+    streams, _ = _ingest(spark, bad, validate="permissive")
+    assert [r["_validation_error"] for r in streams["s"].collect()] == [
+        "type:id:integer"
+    ]
+
+
+def test_validation_plan_grows_linearly_with_checks(spark):
+    """The violation label is one flat expression over the checks: twice
+    the constrained properties must not mean more than ~twice the plan
+    (a when-chain nesting the previous label doubles with each check)."""
+    from target_s3_parquet_spark.sources.singer import (
+        StreamPlan,
+        parse_message_lines,
+        records_for_stream,
+    )
+
+    messages = parse_message_lines(spark.createDataFrame([], "value string"))
+
+    def plan_size(n):
+        schema = {
+            "type": "object",
+            "properties": {
+                f"p{i}": {"type": ["null", "string"], "maxLength": 8}
+                for i in range(n)
+            },
+        }
+        df = records_for_stream(messages, StreamPlan("s", schema), "permissive")
+        return len(df._jdf.queryExecution().analyzed().toString())
+
+    assert plan_size(12) < 3 * plan_size(6)
+
+
+def test_truncated_line_is_corrupt(spark, tmp_path):
+    """A line cut off mid-write still yields its leading envelope fields
+    from a lenient parse; it must fail the run all the same."""
+    from target_s3_parquet_spark.sources.singer import SingerError
+
+    lines = fx.three_stream_log()[:4]
+    lines.append(lines[3][:-2])
+    with pytest.raises(SingerError, match="invalid JSON"):
+        _ingest(spark, fx.write_log(str(tmp_path), lines))
