@@ -9,6 +9,8 @@ fair end-to-end number (scan → shuffle → result).
 
 from __future__ import annotations
 
+import contextlib
+import importlib
 import json
 import os
 import sys
@@ -48,6 +50,121 @@ HEADLINE = [
 ]
 
 
+def measure(spark, sf_dir: str, queries: dict, keys, runs: int):
+    """Time each key as min-of-`runs` full `count()` actions.
+
+    Returns `({key: seconds}, {key: replay breakdown})`. A failing key
+    records -1.0 and the loop goes on. The replay timings are reset
+    before every run, so a key's prep/stream/sink breakdown (r12
+    VERDICT item 8) is the one of its own best run; only keys that
+    replayed a stream get one. Caches are released after every key,
+    failed or not, so nothing a key cached leaks into the next."""
+    from target_s3_parquet_spark.operators._util import release_rank_caches
+    from target_s3_parquet_spark.streaming import replay
+
+    timings: dict[str, float] = {}
+    breakdown: dict[str, dict] = {}
+    for name in keys:
+        try:
+            best = None
+            for _ in range(runs):
+                replay.reset_timings()
+                t0 = time.time()
+                queries[name](spark, sf_dir).count()
+                elapsed = time.time() - t0
+                if best is None or elapsed < best:
+                    best = elapsed
+                    if replay.LAST_TIMINGS["n_replays"]:
+                        breakdown[name] = {
+                            k: round(v, 3)
+                            for k, v in replay.LAST_TIMINGS.items()
+                        }
+            timings[name] = round(best, 3)
+            print(f"# {name}: {timings[name]}s (min of {runs})",
+                  file=sys.stderr)
+        except Exception as e:  # noqa: BLE001
+            timings[name] = -1.0
+            print(f"# {name} FAILED: {e}", file=sys.stderr)
+        finally:
+            with contextlib.suppress(Exception):
+                spark.catalog.clearCache()
+                release_rank_caches()
+    return timings, breakdown
+
+
+def _tool(module: str, fn: str):
+    """`tools.<module>.<fn>`, imported when its extras row runs, so a
+    tool that cannot import only costs its own entry."""
+    return getattr(importlib.import_module(f"tools.{module}"), fn)
+
+
+def _skew_join_sec(spark) -> dict:
+    s = _tool("bench_skew", "run_skew")(spark, n=4_000_000)
+    return {k: v for k, v in s.items() if k != "n_fact_rows"}
+
+
+def _stream_ingest(spark) -> dict:
+    run_stream = _tool("bench_stream", "run_stream")
+    st = run_stream(spark, n=50_000, n_files=4)
+    # The 12.5k-records/trigger number above is dominated by the
+    # per-epoch fixed cost (trigger planning + checkpoint commit, see
+    # BASELINE.md streaming section). The OPERATING-POINT measurement
+    # at the documented 50k-records/trigger setting amortizes that cost
+    # and is the round-over-round comparable.
+    st50 = run_stream(spark, n=200_000, n_files=4)
+    peak = max(
+        (r / ms * 1000.0)
+        for r, ms in zip(st50["epoch_rows"], st50["epoch_ms"])
+        if ms
+    )
+    return {
+        "stream_ingest_rps": st["value"],
+        "stream_ingest_rps_50k_trigger": st50["value"],
+        "stream_ingest_rps_peak_epoch": round(peak, 1),
+    }
+
+
+def run_tools(spark, sf_dir: str) -> dict:
+    """Measured scale evidence beyond the registered keys (small sizes:
+    the point is the recorded ratio/rate per round, not a stress run).
+    One `(name, callable)` row per tool; a row's callable returns its
+    extras entries, and a failure records `<name>_error` instead."""
+
+    def one(name, module, fn, *args, **kw):
+        return name, lambda: {name: _tool(module, fn)(spark, *args, **kw)}
+
+    rows = [
+        one("ntile_scale", "bench_ntile", "run_ntile_scale"),
+        one("rank_stats_scale", "bench_ranks", "run_rank_stats_scale"),
+        one("tau_scale", "bench_tau", "run_tau_scale"),
+        one("topk_scale", "bench_topk", "run_topk_scale"),
+        one("opq_recall", "bench_opq", "run_opq_recall", sf_dir),
+        one("lsh_sweep", "bench_lsh_minhash", "run_lsh", sf_dir,
+            profiles=[(4, 1), (4, 3), (8, 4), (16, 2)]),
+        # skew strategies on a 90%-hot-key join
+        ("skew_join", lambda: {"skew_join_sec": _skew_join_sec(spark)}),
+        one("scale10", "bench_scale", "run_scale", sf_dir, factor=10),
+        *(
+            one(f"scale10_{r}", "bench_scale_r10", "run_scaled_keys",
+                sf_dir, r, factor=10)
+            for r in ("r10", "r11", "r12")
+        ),
+        # streaming Singer ingest throughput from the engine's own
+        # progress events
+        ("stream_ingest", lambda: _stream_ingest(spark)),
+    ]
+    extras: dict = {}
+    for name, run in rows:
+        try:
+            got = run()
+            extras.update(got)
+            print(f"# {name}: {got}", file=sys.stderr)
+        except Exception as e:  # noqa: BLE001
+            extras[f"{name}_error"] = str(e)[:120]
+            print(f"# {name} FAILED: {e}", file=sys.stderr)
+    return extras
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from target_s3_parquet_spark.operators._util import release_rank_caches
@@ -79,17 +196,14 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     floors: dict[str, float] = {}
+    # Headline stays min-of-2 (the protocol every prior round's artifact
+    # used, so round-over-round totals remain comparable); a third run
+    # extends each key to the min-of-3 FLOOR recorded in extras (VERDICT
+    # r9 item 3) — the ambience-free number that decides
+    # regression-vs-noise without consuming a judge cycle.
+    floor_runs = 3
     for name in HEADLINE:
         fn = queries[name]
-        # Headline stays min-of-2 (the protocol every prior round's
-        # artifact used, so round-over-round totals remain comparable);
-        # a third run extends each key to the min-of-3 FLOOR recorded
-        # in extras (VERDICT r9 item 3) — the ambience-free number that
-        # decides regression-vs-noise without consuming a judge cycle.
-        # SPARK_GRAFT_FLOOR_RUNS=2 opts out of the third run when bench
-        # latency matters more than the floor (r10 ADVICE); the driver
-        # default keeps min-of-3.
-        floor_runs = max(2, int(os.environ.get("SPARK_GRAFT_FLOOR_RUNS", "3")))
         runs, n = [], 0
         for _ in range(floor_runs):
             t0 = time.time()
@@ -121,11 +235,8 @@ def main() -> None:
     }
     print(f"# headline: {json.dumps(headline_json)}", file=sys.stderr, flush=True)
 
-    # Measured scale evidence beyond the headline queries (small sizes —
-    # the point is the recorded ratio/rate per round, not a stress run):
-    # skew strategies on a 90%-hot-key join, and streaming Singer ingest
-    # throughput from the engine's own progress events. Failures here
-    # must never sink the headline bench line.
+    # Everything below is extras-only: failures here must never sink
+    # the headline bench line.
     extras: dict = {}
     # The bench floor protocol (VERDICT r9 item 3): per-key min-of-3
     # next to the min-of-2 headline. `value` is the floor total —
@@ -156,622 +267,243 @@ def main() -> None:
         "agg_rank_sketch_merge_check",
         "docs_dup_source_matrix",
     ]
-    h2: dict[str, float] = {}
-    # Replay-harness cost breakdown (r12 VERDICT item 8): for the
-    # replayed streaming keys, record chunk-prep vs streaming vs sink
-    # wall-clock SEPARATELY (from the best run) next to the unchanged
-    # per-key totals — the headline2 methodology itself is untouched.
-    replay_breakdown: dict[str, dict] = {}
-    try:
-        from target_s3_parquet_spark.streaming import replay as _replay
-    except Exception:  # noqa: BLE001
-        _replay = None
-    for name in HEADLINE2:
-        try:
-            fn = queries[name]
-            best = None
-            for _ in range(floor_runs):
-                if _replay is not None:
-                    _replay.reset_timings()
-                t0 = time.time()
-                fn(spark, sf_dir).count()
-                elapsed = time.time() - t0
-                if best is None or elapsed < best:
-                    best = elapsed
-                    if (
-                        _replay is not None
-                        and _replay.LAST_TIMINGS.get("n_replays")
-                    ):
-                        replay_breakdown[name] = dict(_replay.LAST_TIMINGS)
-            h2[name] = round(best, 3)
-            print(f"# headline2 {name}: {h2[name]}s", file=sys.stderr)
-            spark.catalog.clearCache()
-            release_rank_caches()
-        except Exception as e:  # noqa: BLE001
-            h2[name] = -1.0
-            print(f"# headline2 {name} FAILED: {e}", file=sys.stderr)
+    h2, replay_breakdown = measure(spark, sf_dir, queries, HEADLINE2, floor_runs)
     extras["headline2_floor"] = {
         "value": round(sum(v for v in h2.values() if v > 0), 3),
         "queries": h2,
         "runs_per_key": floor_runs,
     }
+    # Per-round sweeps, timed OUTSIDE the headline total so the
+    # headline stays comparable across rounds: (extras bucket, keys,
+    # runs per key). Each round keeps its own bucket so earlier sweeps
+    # stay comparable; rows sharing a bucket fill it in table order.
+    # Steady state is min-of-2, except stream_asof_join in r8, swept
+    # once: a replayed streaming key's cost is dominated by fixed
+    # micro-batch scheduling.
+    for bucket, keys, runs in [
+        ("second_sweep_sec", [
+            "ivf_kmeans_train",
+            "docs_line_dedup",
+            "text_ngram_novelty",
+            "ts_rolling_wau",
+            "emb_hamming_pack",
+            "market_basket_pairs",
+            "detect_outliers_mad",
+        ], 2),
+        ("r4_sweep_sec", [
+            "docs_substring_dedup_spans",
+            "er_blocked_fuzzy_join",
+            "emb_pq_codebook_assign",
+            "emb_pq_adc_search",
+            "docs_gopher_rules",
+            "text_char_stats",
+            "search_inverted_index_build",
+            "ts_ewma_halflife",
+            "corpus_filter_funnel",
+            "text_ml_minhash_pipeline",
+        ], 2),
+        ("r5_sweep_sec", [
+            "docs_substring_dedup_apply",
+            "sim_ann_ivfpq_search",
+            "sim_ann_ivfpq_recall",
+            "er_blocked_multipass",
+            "er_multipass_recall_stats",
+            "agg_cms_error_bound",
+            "agg_approx_quantile_bound",
+            "text_allpairs_prefix_join",
+            "text_allpairs_filter_stats",
+            "text_ppjoin_positional_stats",
+            "agg_heavy_hitters_mg",
+            "scan_parquet_footer_stats",
+            "corpus_distribution_drift",
+            "sim_hard_negative_mining",
+            "sample_weighted_systematic",
+            "ts_changepoint_cusum",
+            "text_rake_keywords",
+            "graph_link_prediction",
+            "privacy_l_diversity_audit",
+            "er_cluster_canonicalize",
+            "emb_random_projection_jl",
+            "text_langid_confusion",
+            "corpus_gini_concentration",
+            "ts_seasonal_profile",
+            "emb_cosine_histogram",
+            "docs_boilerplate_line_ratio",
+            "corpus_ccnet_quality_buckets",
+            "er_survivorship_golden_record",
+            "sim_ann_ivfpq_rerank",
+        ], 2),
+        # the three _prod twins sit next to their exact global-window
+        # references, so the prod-vs-exact delta at this SF is recorded
+        ("r6_sweep_sec", [
+            "window_ntile",
+            "window_ntile_prod",
+            "customer_rfm_segments",
+            "customer_rfm_segments_prod",
+            "pareto_revenue_share",
+            "pareto_revenue_share_prod",
+            "text_ppjoin_suffix_stats",
+            "text_bpe_fertility_by_lang",
+            "search_bm25_topk",
+            "emb_gram_matrix_exact",
+            "emb_gram_matrix_prod",
+            "docs_quality_calibration",
+            "docs_dup_source_matrix",
+            "agg_weighted_median",
+            "cdc_scd2_point_in_time_audit",
+            "sim_ann_ivf_cell_stats",
+            "emb_dim_stats",
+        ], 2),
+        ("r7_sweep_sec", [
+            "emb_opq_permute_assign",
+            "emb_opq_distortion_gain",
+            "agg_kmv_distinct_union",
+            "agg_bloom_fpp_measured",
+            "ab_test_chi2_independence",
+            "feature_split_gini",
+            "agg_corr_spearman",
+            "eval_auc_rank_sum",
+            "agg_theta_sketch_intersect",
+            "graph_shortest_path_bfs",
+            "privacy_t_closeness_audit",
+            "dq_benford_digit_audit",
+            "ts_acf_lags",
+            "sql_recursive_hierarchy_rollup",
+            "agg_ks_test_two_sample",
+            "agg_covariance_matrix",
+            "text_collocation_lift_topk",
+            "sample_balanced_class",
+            "stream_kmv_distinct",
+            "pii_pseudonymize_hmac",
+            "sql_session_variables",
+            "sql_scripting_control_flow",
+            "txlog_vacuum_retention",
+            "emb_text_pairing_audit",
+            "ab_test_anova_f",
+            "text_hapax_ratio_by_lang",
+            "funnel_time_to_convert",
+        ], 2),
+        ("r8_sweep_sec", [
+            "agg_corr_kendall_tau",
+            "sample_reservoir_per_group",
+            "agg_kruskal_wallis_h",
+            "ts_cross_correlation_lags",
+            "ts_trend_mann_kendall",
+            "ts_trend_theil_sen",
+        ], 2),
+        ("r8_sweep_sec", ["stream_asof_join"], 1),
+        # replayed streaming keys first (min-of-2, VERDICT r9 item 6: each
+        # run replays the full micro-batch sequence), then the batch keys
+        ("r9_sweep_sec", [
+            "stream_reservoir_sample",
+            "stream_windowed_distinct_count",
+            "stream_topk_per_group",
+            "stream_histogram_quantile",
+            "agg_corr_concordance_stats",
+            "agg_cramers_v_effect_size",
+            "eval_average_precision",
+            "agg_trimmed_winsorized_mean",
+            "search_rrf_fusion",
+            "ts_seasonal_decompose_ma",
+            "dq_numeric_drift_chi2",
+            "ab_test_mann_whitney_u",
+            "eval_confusion_matrix_metrics",
+            "vocab_simpson_diversity",
+            "agg_hhi_concentration",
+            "ts_forecast_eval_naive",
+            "eval_ndcg_at_k",
+            "ab_test_two_proportion_z",
+            "eval_cohens_kappa",
+            "eval_brier_score",
+            "ts_runs_test_median",
+            "ts_fano_burstiness",
+            "privacy_sensitivity_audit",
+            "eval_expected_calibration_error",
+            "feature_scaling_params",
+        ], 2),
+        ("r10_sweep_sec", [
+            "survival_kaplan_meier",
+            "survival_median_landmarks",
+            "agg_mergeable_rank_sketch",
+            "agg_rank_sketch_merge_check",
+            "graph_label_propagation",
+            "graph_lpa_modularity",
+            "graph_kcore_decomposition",
+            "eval_lift_gains_decile",
+            "eval_precision_recall_at_k",
+            "dq_completeness_profile",
+            "dq_referential_integrity_audit",
+            "corpus_budget_apportionment",
+            "sample_neyman_allocation",
+            "ab_test_cuped_adjustment",
+            "cohort_ltv_curves",
+            "pareto_frontier_skyline",
+            "events_path_trigrams",
+            "dq_candidate_key_audit",
+            "docs_dup_cluster_histogram",
+            "ts_ljung_box_q",
+        ], 2),
+        ("r11_sweep_sec", [
+            "sim_bitext_margin_knn",
+            "corpus_dsir_importance_weights",
+            "graph_hits_scores",
+            "dq_freshness_audit",
+            "agg_moments_merge_check",
+            "eval_mrr_at_k",
+            "eval_bootstrap_ci_hash",
+            "eval_bradley_terry_strength",
+            "vocab_heaps_curve",
+            "ts_pacf_durbin_levinson",
+            "emb_pca_power_iteration",
+            "graph_link_prediction_ra",
+            "sample_priority_wor",
+            "corpus_dsir_resample_apply",
+            "events_markov_attribution",
+            "emb_pc1_removal_variance",
+            "text_kneser_ney_bigram_top",
+            "eval_rank_biased_overlap",
+            "ts_sax_symbols",
+            "search_phrase_proximity",
+        ], 2),
+        ("r12_sweep_sec", [
+            "corpus_unimax_mixture",
+            "agg_tdigest_quantiles",
+            "agg_tdigest_merge_check",
+            "text_simhash_hamming_prod",
+            "vocab_good_turing_counts",
+            "eval_conformal_interval",
+            "emb_pca_top2_deflation",
+            "er_fellegi_sunter_weights",
+            "docs_cdc_chunk_dedup",
+            "ts_matrix_profile_lite",
+            "eval_brier_murphy_decomposition",
+            "eval_isotonic_calibration",
+            "vocab_chao1_richness",
+            "ab_test_permutation_hash",
+            "graph_personalized_pagerank",
+            "agg_count_sketch_estimate",
+            "docs_minhash_containment",
+            "graph_closeness_centrality",
+            "eval_auc_hanley_ci",
+            "eval_mcnemar_paired",
+            "eval_fleiss_kappa",
+            "ab_test_cochran_armitage_trend",
+            "ab_test_sequential_sprt",
+            "agg_hodges_lehmann_location",
+            "graph_betweenness_centrality",
+            "ts_dtw_alignment_distance",
+            "join_yannakakis_program",
+            "text_burrows_delta",
+        ], 2),
+    ]:
+        got, breakdown = measure(spark, sf_dir, queries, keys, runs)
+        extras.setdefault(bucket, {}).update(got)
+        # a headline2 key keeps the breakdown of its min-of-3 floor
+        replay_breakdown = {**breakdown, **replay_breakdown}
     if replay_breakdown:
         extras["stream_replay_breakdown"] = replay_breakdown
         print(f"# stream_replay_breakdown: {replay_breakdown}", file=sys.stderr)
-    # Round-3 second-sweep operators, timed OUTSIDE the headline total
-    # so the headline stays comparable across rounds (same 24-key set
-    # since r2). min-of-2 steady state, same protocol.
-    SWEEP = [
-        "ivf_kmeans_train",
-        "docs_line_dedup",
-        "text_ngram_novelty",
-        "ts_rolling_wau",
-        "emb_hamming_pack",
-        "market_basket_pairs",
-        "detect_outliers_mad",
-    ]
-    sweep_t: dict[str, float] = {}
-    for name in SWEEP:
-        try:
-            fn = queries[name]
-            best = None
-            for _ in range(2):
-                t0 = time.time()
-                fn(spark, sf_dir).count()
-                elapsed = time.time() - t0
-                best = elapsed if best is None else min(best, elapsed)
-            sweep_t[name] = round(best, 3)
-            print(f"# sweep {name}: {sweep_t[name]}s", file=sys.stderr)
-            spark.catalog.clearCache()
-        except Exception as e:  # noqa: BLE001
-            sweep_t[name] = -1.0
-            print(f"# sweep {name} FAILED: {e}", file=sys.stderr)
-    extras["second_sweep_sec"] = sweep_t
-    # Round-4 additions, timed the same way in their own bucket so the
-    # r2-era sweeps stay comparable across rounds.
-    SWEEP_R4 = [
-        "docs_substring_dedup_spans",
-        "er_blocked_fuzzy_join",
-        "emb_pq_codebook_assign",
-        "emb_pq_adc_search",
-        "docs_gopher_rules",
-        "text_char_stats",
-        "search_inverted_index_build",
-        "ts_ewma_halflife",
-        "corpus_filter_funnel",
-        "text_ml_minhash_pipeline",
-    ]
-    r4_t: dict[str, float] = {}
-    for name in SWEEP_R4:
-        try:
-            fn = queries[name]
-            best = None
-            for _ in range(2):
-                t0 = time.time()
-                fn(spark, sf_dir).count()
-                elapsed = time.time() - t0
-                best = elapsed if best is None else min(best, elapsed)
-            r4_t[name] = round(best, 3)
-            print(f"# r4 sweep {name}: {r4_t[name]}s", file=sys.stderr)
-            spark.catalog.clearCache()
-        except Exception as e:  # noqa: BLE001
-            r4_t[name] = -1.0
-            print(f"# r4 sweep {name} FAILED: {e}", file=sys.stderr)
-    extras["r4_sweep_sec"] = r4_t
-    # Round-5 additions, same protocol, own bucket.
-    SWEEP_R5 = [
-        "docs_substring_dedup_apply",
-        "sim_ann_ivfpq_search",
-        "sim_ann_ivfpq_recall",
-        "er_blocked_multipass",
-        "er_multipass_recall_stats",
-        "agg_cms_error_bound",
-        "agg_approx_quantile_bound",
-        "text_allpairs_prefix_join",
-        "text_allpairs_filter_stats",
-        "text_ppjoin_positional_stats",
-        "agg_heavy_hitters_mg",
-        "scan_parquet_footer_stats",
-        "corpus_distribution_drift",
-        "sim_hard_negative_mining",
-        "sample_weighted_systematic",
-        "ts_changepoint_cusum",
-        "text_rake_keywords",
-        "graph_link_prediction",
-        "privacy_l_diversity_audit",
-        "er_cluster_canonicalize",
-        "emb_random_projection_jl",
-        "text_langid_confusion",
-        "corpus_gini_concentration",
-        "ts_seasonal_profile",
-        "emb_cosine_histogram",
-        "docs_boilerplate_line_ratio",
-        "corpus_ccnet_quality_buckets",
-        "er_survivorship_golden_record",
-        "sim_ann_ivfpq_rerank",
-    ]
-    r5_t: dict[str, float] = {}
-    for name in SWEEP_R5:
-        try:
-            fn = queries[name]
-            best = None
-            for _ in range(2):
-                t0 = time.time()
-                fn(spark, sf_dir).count()
-                elapsed = time.time() - t0
-                best = elapsed if best is None else min(best, elapsed)
-            r5_t[name] = round(best, 3)
-            print(f"# r5 sweep {name}: {r5_t[name]}s", file=sys.stderr)
-            spark.catalog.clearCache()
-        except Exception as e:  # noqa: BLE001
-            r5_t[name] = -1.0
-            print(f"# r5 sweep {name} FAILED: {e}", file=sys.stderr)
-    extras["r5_sweep_sec"] = r5_t
-    # Round-6 additions: the three _prod twins next to their exact
-    # global-window references, so the artifact records the prod-vs-
-    # exact delta at this SF directly.
-    SWEEP_R6 = [
-        "window_ntile",
-        "window_ntile_prod",
-        "customer_rfm_segments",
-        "customer_rfm_segments_prod",
-        "pareto_revenue_share",
-        "pareto_revenue_share_prod",
-        "text_ppjoin_suffix_stats",
-        "text_bpe_fertility_by_lang",
-        "search_bm25_topk",
-        "emb_gram_matrix_exact",
-        "emb_gram_matrix_prod",
-        "docs_quality_calibration",
-        "docs_dup_source_matrix",
-        "agg_weighted_median",
-        "cdc_scd2_point_in_time_audit",
-        "sim_ann_ivf_cell_stats",
-        "emb_dim_stats",
-    ]
-    r6_t: dict[str, float] = {}
-    for name in SWEEP_R6:
-        try:
-            fn = queries[name]
-            best = None
-            for _ in range(2):
-                t0 = time.time()
-                fn(spark, sf_dir).count()
-                elapsed = time.time() - t0
-                best = elapsed if best is None else min(best, elapsed)
-            r6_t[name] = round(best, 3)
-            print(f"# r6 sweep {name}: {r6_t[name]}s", file=sys.stderr)
-            spark.catalog.clearCache()
-        except Exception as e:  # noqa: BLE001
-            r6_t[name] = -1.0
-            print(f"# r6 sweep {name} FAILED: {e}", file=sys.stderr)
-    extras["r6_sweep_sec"] = r6_t
-    # Round-7 additions, same protocol, own bucket.
-    SWEEP_R7 = [
-        "emb_opq_permute_assign",
-        "emb_opq_distortion_gain",
-        "agg_kmv_distinct_union",
-        "agg_bloom_fpp_measured",
-        "ab_test_chi2_independence",
-        "feature_split_gini",
-        "agg_corr_spearman",
-        "eval_auc_rank_sum",
-        "agg_theta_sketch_intersect",
-        "graph_shortest_path_bfs",
-        "privacy_t_closeness_audit",
-        "dq_benford_digit_audit",
-        "ts_acf_lags",
-        "sql_recursive_hierarchy_rollup",
-        "agg_ks_test_two_sample",
-        "agg_covariance_matrix",
-        "text_collocation_lift_topk",
-        "sample_balanced_class",
-        "stream_kmv_distinct",
-        "pii_pseudonymize_hmac",
-        "sql_session_variables",
-        "sql_scripting_control_flow",
-        "txlog_vacuum_retention",
-        "emb_text_pairing_audit",
-        "ab_test_anova_f",
-        "text_hapax_ratio_by_lang",
-        "funnel_time_to_convert",
-    ]
-    r7_t: dict[str, float] = {}
-    for name in SWEEP_R7:
-        try:
-            fn = queries[name]
-            best = None
-            for _ in range(2):
-                t0 = time.time()
-                fn(spark, sf_dir).count()
-                elapsed = time.time() - t0
-                best = elapsed if best is None else min(best, elapsed)
-            r7_t[name] = round(best, 3)
-            print(f"# r7 sweep {name}: {r7_t[name]}s", file=sys.stderr)
-            spark.catalog.clearCache()
-        except Exception as e:  # noqa: BLE001
-            r7_t[name] = -1.0
-            print(f"# r7 sweep {name} FAILED: {e}", file=sys.stderr)
-    extras["r7_sweep_sec"] = r7_t
-    # Round-8 additions (stream_asof_join swept once, not min-of-2: a
-    # replayed streaming key's cost is dominated by fixed micro-batch
-    # scheduling, and one observation is the honest number).
-    SWEEP_R8 = [
-        "agg_corr_kendall_tau",
-        "sample_reservoir_per_group",
-        "agg_kruskal_wallis_h",
-        "ts_cross_correlation_lags",
-        "ts_trend_mann_kendall",
-        "ts_trend_theil_sen",
-    ]
-    r8_t: dict[str, float] = {}
-    for name in SWEEP_R8:
-        try:
-            fn = queries[name]
-            best = None
-            for _ in range(2):
-                t0 = time.time()
-                fn(spark, sf_dir).count()
-                elapsed = time.time() - t0
-                best = elapsed if best is None else min(best, elapsed)
-            r8_t[name] = round(best, 3)
-            print(f"# r8 sweep {name}: {r8_t[name]}s", file=sys.stderr)
-            spark.catalog.clearCache()
-            release_rank_caches()
-        except Exception as e:  # noqa: BLE001
-            r8_t[name] = -1.0
-            print(f"# r8 sweep {name} FAILED: {e}", file=sys.stderr)
-    try:
-        t0 = time.time()
-        queries["stream_asof_join"](spark, sf_dir).count()
-        r8_t["stream_asof_join"] = round(time.time() - t0, 3)
-        print(f"# r8 sweep stream_asof_join: {r8_t['stream_asof_join']}s",
-              file=sys.stderr)
-        spark.catalog.clearCache()
-        release_rank_caches()
-    except Exception as e:  # noqa: BLE001
-        r8_t["stream_asof_join"] = -1.0
-        print(f"# r8 sweep stream_asof_join FAILED: {e}", file=sys.stderr)
-    extras["r8_sweep_sec"] = r8_t
-    # Round-9 additions — both are replayed streaming keys, swept once
-    # (micro-batch scheduling dominates; one observation is the honest
-    # number). stream_reservoir_sample landed after the r8 bench and
-    # had no recorded sweep entry (VERDICT r8 item 6).
-    SWEEP_R9_STREAM = [
-        "stream_reservoir_sample",
-        "stream_windowed_distinct_count",
-        "stream_topk_per_group",
-        "stream_histogram_quantile",
-    ]
-    r9_t: dict[str, float] = {}
-    for name in SWEEP_R9_STREAM:
-        try:
-            # min-of-2 (VERDICT r9 item 6): the r9 artifact's streaming
-            # numbers were single observations on a loaded container;
-            # each run replays the full micro-batch sequence, so the
-            # min is a genuine second independent measurement.
-            best = None
-            for _ in range(2):
-                t0 = time.time()
-                queries[name](spark, sf_dir).count()
-                elapsed = time.time() - t0
-                best = elapsed if best is None else min(best, elapsed)
-            r9_t[name] = round(best, 3)
-            print(f"# r9 sweep {name}: {r9_t[name]}s", file=sys.stderr)
-            spark.catalog.clearCache()
-            release_rank_caches()
-        except Exception as e:  # noqa: BLE001
-            r9_t[name] = -1.0
-            print(f"# r9 sweep {name} FAILED: {e}", file=sys.stderr)
-    # batch r9 key: min-of-2, like every other batch sweep entry
-    try:
-        fn = queries["agg_corr_concordance_stats"]
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            fn(spark, sf_dir).count()
-            elapsed = time.time() - t0
-            best = elapsed if best is None else min(best, elapsed)
-        r9_t["agg_corr_concordance_stats"] = round(best, 3)
-        print(
-            f"# r9 sweep agg_corr_concordance_stats: "
-            f"{r9_t['agg_corr_concordance_stats']}s",
-            file=sys.stderr,
-        )
-        spark.catalog.clearCache()
-        release_rank_caches()
-    except Exception as e:  # noqa: BLE001
-        r9_t["agg_corr_concordance_stats"] = -1.0
-        print(f"# r9 sweep agg_corr_concordance_stats FAILED: {e}",
-              file=sys.stderr)
-    # r9 breadth batch keys: min-of-2 steady state, same protocol as
-    # every other batch sweep bucket.
-    SWEEP_R9_BATCH = [
-        "agg_cramers_v_effect_size",
-        "eval_average_precision",
-        "agg_trimmed_winsorized_mean",
-        "search_rrf_fusion",
-        "ts_seasonal_decompose_ma",
-        "dq_numeric_drift_chi2",
-        "ab_test_mann_whitney_u",
-        "eval_confusion_matrix_metrics",
-        "vocab_simpson_diversity",
-        "agg_hhi_concentration",
-        "ts_forecast_eval_naive",
-        "eval_ndcg_at_k",
-        "ab_test_two_proportion_z",
-        "eval_cohens_kappa",
-        "eval_brier_score",
-        "ts_runs_test_median",
-        "ts_fano_burstiness",
-        "privacy_sensitivity_audit",
-        "eval_expected_calibration_error",
-        "feature_scaling_params",
-    ]
-    for name in SWEEP_R9_BATCH:
-        try:
-            fn = queries[name]
-            best = None
-            for _ in range(2):
-                t0 = time.time()
-                fn(spark, sf_dir).count()
-                elapsed = time.time() - t0
-                best = elapsed if best is None else min(best, elapsed)
-            r9_t[name] = round(best, 3)
-            print(f"# r9 sweep {name}: {r9_t[name]}s", file=sys.stderr)
-            spark.catalog.clearCache()
-            release_rank_caches()
-        except Exception as e:  # noqa: BLE001
-            r9_t[name] = -1.0
-            print(f"# r9 sweep {name} FAILED: {e}", file=sys.stderr)
-    extras["r9_sweep_sec"] = r9_t
-    # r10 breadth batch: min-of-2 steady state, same protocol.
-    SWEEP_R10 = [
-        "survival_kaplan_meier",
-        "survival_median_landmarks",
-        "agg_mergeable_rank_sketch",
-        "agg_rank_sketch_merge_check",
-        "graph_label_propagation",
-        "graph_lpa_modularity",
-        "graph_kcore_decomposition",
-        "eval_lift_gains_decile",
-        "eval_precision_recall_at_k",
-        "dq_completeness_profile",
-        "dq_referential_integrity_audit",
-        "corpus_budget_apportionment",
-        "sample_neyman_allocation",
-        "ab_test_cuped_adjustment",
-        "cohort_ltv_curves",
-        "pareto_frontier_skyline",
-        "events_path_trigrams",
-        "dq_candidate_key_audit",
-        "docs_dup_cluster_histogram",
-        "ts_ljung_box_q",
-    ]
-    r10_t: dict[str, float] = {}
-    for name in SWEEP_R10:
-        try:
-            fn = queries[name]
-            best = None
-            for _ in range(2):
-                t0 = time.time()
-                fn(spark, sf_dir).count()
-                elapsed = time.time() - t0
-                best = elapsed if best is None else min(best, elapsed)
-            r10_t[name] = round(best, 3)
-            print(f"# r10 sweep {name}: {r10_t[name]}s", file=sys.stderr)
-            spark.catalog.clearCache()
-            release_rank_caches()
-        except Exception as e:  # noqa: BLE001
-            r10_t[name] = -1.0
-            print(f"# r10 sweep {name} FAILED: {e}", file=sys.stderr)
-    extras["r10_sweep_sec"] = r10_t
-    # r11 breadth keys: min-of-2 steady state, same protocol.
-    SWEEP_R11 = [
-        "sim_bitext_margin_knn",
-        "corpus_dsir_importance_weights",
-        "graph_hits_scores",
-        "dq_freshness_audit",
-        "agg_moments_merge_check",
-        "eval_mrr_at_k",
-        "eval_bootstrap_ci_hash",
-        "eval_bradley_terry_strength",
-        "vocab_heaps_curve",
-        "ts_pacf_durbin_levinson",
-        "emb_pca_power_iteration",
-        "graph_link_prediction_ra",
-        "sample_priority_wor",
-        "corpus_dsir_resample_apply",
-        "events_markov_attribution",
-        "emb_pc1_removal_variance",
-        "text_kneser_ney_bigram_top",
-        "eval_rank_biased_overlap",
-        "ts_sax_symbols",
-        "search_phrase_proximity",
-    ]
-    r11_t: dict[str, float] = {}
-    for name in SWEEP_R11:
-        try:
-            fn = queries[name]
-            best = None
-            for _ in range(2):
-                t0 = time.time()
-                fn(spark, sf_dir).count()
-                elapsed = time.time() - t0
-                best = elapsed if best is None else min(best, elapsed)
-            r11_t[name] = round(best, 3)
-            print(f"# r11 sweep {name}: {r11_t[name]}s", file=sys.stderr)
-            spark.catalog.clearCache()
-            release_rank_caches()
-        except Exception as e:  # noqa: BLE001
-            r11_t[name] = -1.0
-            print(f"# r11 sweep {name} FAILED: {e}", file=sys.stderr)
-    extras["r11_sweep_sec"] = r11_t
-    # r12 breadth keys: min-of-2 steady state, same protocol.
-    SWEEP_R12 = [
-        "corpus_unimax_mixture",
-        "agg_tdigest_quantiles",
-        "agg_tdigest_merge_check",
-        "text_simhash_hamming_prod",
-        "vocab_good_turing_counts",
-        "eval_conformal_interval",
-        "emb_pca_top2_deflation",
-        "er_fellegi_sunter_weights",
-        "docs_cdc_chunk_dedup",
-        "ts_matrix_profile_lite",
-        "eval_brier_murphy_decomposition",
-        "eval_isotonic_calibration",
-        "vocab_chao1_richness",
-        "ab_test_permutation_hash",
-        "graph_personalized_pagerank",
-        "agg_count_sketch_estimate",
-        "docs_minhash_containment",
-        "graph_closeness_centrality",
-        "eval_auc_hanley_ci",
-        "eval_mcnemar_paired",
-        "eval_fleiss_kappa",
-        "ab_test_cochran_armitage_trend",
-        "ab_test_sequential_sprt",
-        "agg_hodges_lehmann_location",
-        "graph_betweenness_centrality",
-        "ts_dtw_alignment_distance",
-        "join_yannakakis_program",
-        "text_burrows_delta",
-    ]
-    r12_t: dict[str, float] = {}
-    for name in SWEEP_R12:
-        try:
-            fn = queries[name]
-            best = None
-            for _ in range(2):
-                t0 = time.time()
-                fn(spark, sf_dir).count()
-                elapsed = time.time() - t0
-                best = elapsed if best is None else min(best, elapsed)
-            r12_t[name] = round(best, 3)
-            print(f"# r12 sweep {name}: {r12_t[name]}s", file=sys.stderr)
-            spark.catalog.clearCache()
-            release_rank_caches()
-        except Exception as e:  # noqa: BLE001
-            r12_t[name] = -1.0
-            print(f"# r12 sweep {name} FAILED: {e}", file=sys.stderr)
-    extras["r12_sweep_sec"] = r12_t
-    try:
-        from tools.bench_ntile import run_ntile_scale
-
-        ns = run_ntile_scale(spark)
-        extras["ntile_scale"] = ns
-        print(f"# ntile_scale: {ns}", file=sys.stderr)
-    except Exception as e:  # noqa: BLE001
-        extras["ntile_scale_error"] = str(e)[:120]
-    try:
-        from tools.bench_ranks import run_rank_stats_scale
-
-        rs = run_rank_stats_scale(spark)
-        extras["rank_stats_scale"] = rs
-        print(f"# rank_stats_scale: {rs}", file=sys.stderr)
-    except Exception as e:  # noqa: BLE001
-        extras["rank_stats_scale_error"] = str(e)[:120]
-    try:
-        from tools.bench_tau import run_tau_scale
-
-        ts = run_tau_scale(spark)
-        extras["tau_scale"] = ts
-        print(f"# tau_scale: {ts}", file=sys.stderr)
-    except Exception as e:  # noqa: BLE001
-        extras["tau_scale_error"] = str(e)[:120]
-    try:
-        from tools.bench_topk import run_topk_scale
-
-        tk = run_topk_scale(spark)
-        extras["topk_scale"] = tk
-        print(f"# topk_scale: {tk}", file=sys.stderr)
-    except Exception as e:  # noqa: BLE001
-        extras["topk_scale_error"] = str(e)[:120]
-    try:
-        from tools.bench_opq import run_opq_recall
-
-        opq = run_opq_recall(spark, sf_dir)
-        extras["opq_recall"] = opq
-        print(f"# opq_recall: {opq}", file=sys.stderr)
-    except Exception as e:  # noqa: BLE001
-        extras["opq_recall_error"] = str(e)[:120]
-    try:
-        from tools.bench_lsh_minhash import run_lsh
-
-        lsh = run_lsh(spark, sf_dir, profiles=[(4, 1), (4, 3), (8, 4), (16, 2)])
-        extras["lsh_sweep"] = lsh
-        print(f"# lsh_sweep: {lsh['profiles']}", file=sys.stderr)
-    except Exception as e:  # noqa: BLE001
-        extras["lsh_sweep_error"] = str(e)[:120]
-    try:
-        from tools.bench_skew import run_skew
-
-        s = run_skew(spark, n=4_000_000)
-        extras["skew_join_sec"] = {
-            k: v for k, v in s.items() if k != "n_fact_rows"
-        }
-        print(f"# skew_join(4M rows): {extras['skew_join_sec']}", file=sys.stderr)
-    except Exception as e:  # noqa: BLE001
-        extras["skew_join_error"] = str(e)[:120]
-    try:
-        from tools.bench_scale import run_scale
-
-        sc = run_scale(spark, sf_dir, factor=10)
-        extras["scale10"] = sc
-        print(f"# scale10: {sc}", file=sys.stderr)
-    except Exception as e:  # noqa: BLE001
-        extras["scale10_error"] = str(e)[:120]
-    try:
-        from tools.bench_scale_r10 import run_scale_r10
-
-        sc10 = run_scale_r10(spark, sf_dir, factor=10)
-        extras["scale10_r10"] = sc10
-        print(f"# scale10_r10: {sc10}", file=sys.stderr)
-    except Exception as e:  # noqa: BLE001
-        extras["scale10_r10_error"] = str(e)[:120]
-    try:
-        from tools.bench_scale_r10 import run_scale_r11
-
-        sc11 = run_scale_r11(spark, sf_dir, factor=10)
-        extras["scale10_r11"] = sc11
-        print(f"# scale10_r11: {sc11}", file=sys.stderr)
-    except Exception as e:  # noqa: BLE001
-        extras["scale10_r11_error"] = str(e)[:120]
-    try:
-        from tools.bench_scale_r10 import run_scale_r12
-
-        sc12 = run_scale_r12(spark, sf_dir, factor=10)
-        extras["scale10_r12"] = sc12
-        print(f"# scale10_r12: {sc12}", file=sys.stderr)
-    except Exception as e:  # noqa: BLE001
-        extras["scale10_r12_error"] = str(e)[:120]
-    try:
-        from tools.bench_stream import run_stream
-
-        st = run_stream(spark, n=50_000, n_files=4)
-        extras["stream_ingest_rps"] = st["value"]
-        print(f"# stream_ingest: {st['value']} rec/s", file=sys.stderr)
-        # The 12.5k-records/trigger number above is dominated by the
-        # per-epoch fixed cost (trigger planning + checkpoint commit,
-        # see BASELINE.md streaming section). The OPERATING-POINT
-        # measurement at the documented 50k-records/trigger setting
-        # amortizes that cost and is the round-over-round comparable.
-        st50 = run_stream(spark, n=200_000, n_files=4)
-        extras["stream_ingest_rps_50k_trigger"] = st50["value"]
-        peak = max(
-            (r / ms * 1000.0)
-            for r, ms in zip(st50["epoch_rows"], st50["epoch_ms"])
-            if ms
-        )
-        extras["stream_ingest_rps_peak_epoch"] = round(peak, 1)
-        print(
-            f"# stream_ingest@50k/trigger: {st50['value']} rec/s "
-            f"(peak epoch {extras['stream_ingest_rps_peak_epoch']})",
-            file=sys.stderr,
-        )
-    except Exception as e:  # noqa: BLE001
-        extras["stream_ingest_error"] = str(e)[:120]
+    extras.update(run_tools(spark, sf_dir))
 
     # Stop the JVM BEFORE the final print: any shutdown noise (py4j,
     # log4j flushes) lands above the last line instead of after it.

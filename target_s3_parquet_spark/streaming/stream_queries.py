@@ -1105,94 +1105,6 @@ def stream_python_datasource(spark, sf_dir):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-# NOT registered as a driver key: transformWithState's state-server
-# protocol needs `google.protobuf`, which this container doesn't ship
-# (and installs are off-limits). The operator is complete and covered
-# by tests/test_streaming_tws.py, which import-skips when protobuf is
-# absent; on a normal Spark 4 install it runs as-is. Oracle twin (for
-# when it can run):
-#   SELECT user_id, COUNT(*) AS total_events,
-#          CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total_value,
-#          COUNT(DISTINCT event_type) AS n_types
-#   FROM events GROUP BY user_id
-def stream_transform_with_state(spark, sf_dir):
-    """Spark 4 `transformWithStateInPandas`: the successor to
-    applyInPandasWithState with TYPED state primitives — here a
-    ValueState for the running (count, micro-unit sum) and a MapState
-    keyed by event_type standing in for a distinct-set. State lives in
-    the state store (RocksDB at scale) per user key; each micro-batch
-    updates it Arrow-batched and emits the running snapshot, and the
-    final emission per user must equal the batch aggregate the oracle
-    computes. Sums travel as integer micro-units so the state is
-    order/partitioning-independent (same discipline as
-    `stream_stateful_running`)."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    events = t(spark, sf_dir, "events").select("user_id", "event_type", "value")
-
-    class RunningAgg(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState("agg", "cnt long, total long")
-            self._types = handle.getMapState(
-                "types", "event_type string", "seen short"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            got = self._agg.get()
-            cnt, total = got if got is not None else (0, 0)
-            for pdf in rows:
-                cnt += len(pdf)
-                total += int(
-                    pdf["value"].mul(1_000_000).round().astype("int64").sum()
-                )
-                for et in pdf["event_type"].unique():
-                    self._types.updateValue((et,), (1,))
-            self._agg.update((cnt, total))
-            n_types = sum(1 for _ in self._types.keys())
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "emit_count": [cnt],
-                    "emit_total": [total],
-                    "emit_types": [n_types],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    # transformWithState requires the RocksDB state store provider
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-
-    def build(stream):
-        return stream.groupBy("user_id").transformWithStateInPandas(
-            RunningAgg(),
-            outputStructType=(
-                "user_id long, emit_count long, emit_total long, "
-                "emit_types long"
-            ),
-            outputMode="Update",
-            timeMode="None",
-        )
-
-    emissions = replay_stream(
-        spark, events, build, output_mode="update", n_chunks=3
-    )
-    return emissions.groupBy("user_id").agg(
-        F.max("emit_count").alias("total_events"),
-        (F.max("emit_total").cast("double") / 1_000_000).alias("total_value"),
-        F.max("emit_types").alias("n_types"),
-    )
-
-
 @query(
     "stream_txlog_sink",
     """

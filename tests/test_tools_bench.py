@@ -120,3 +120,61 @@ def test_bench_stdout_contract_headline_is_last_and_fits_tail():
     assert len(line) < 1900, len(line)
     # the self-check guarding this at runtime must be present
     assert "len(final_line) >= 1900" in src
+
+
+def test_bench_measure_min_failure_cleanup_and_breakdown(monkeypatch):
+    """`bench.measure`, driven by stub keys on a fake clock: each key
+    records the minimum of its runs, a raising key records -1.0
+    without stopping the loop, caches are released once per key, and
+    a replayed key's breakdown is the one of its own best run."""
+    import types
+
+    import bench
+    from target_s3_parquet_spark.operators import _util
+    from target_s3_parquet_spark.streaming import replay
+
+    # the stub keys write the module-level timings; restore them after
+    monkeypatch.setattr(replay, "LAST_TIMINGS", dict(replay.LAST_TIMINGS))
+    clock = [0.0]
+    fake_time = types.SimpleNamespace(time=lambda: clock[0])
+    monkeypatch.setattr(bench, "time", fake_time)
+    released = []
+    monkeypatch.setattr(_util, "release_rank_caches", lambda: released.append(1))
+    cleared = []
+    spark = types.SimpleNamespace(
+        catalog=types.SimpleNamespace(clearCache=lambda: cleared.append(1))
+    )
+
+    def key(durations, replays):
+        durations = iter(durations)
+
+        def run(spark, sf_dir):
+            d = next(durations)
+            clock[0] += d
+            if replays:
+                replay.LAST_TIMINGS["stream_sec"] += d
+                replay.LAST_TIMINGS["n_replays"] += 1
+            return types.SimpleNamespace(count=lambda: 0)
+
+        return run
+
+    def boom(spark, sf_dir):
+        raise RuntimeError("boom")
+
+    queries = {
+        "replayed": key([3.0, 1.0, 2.0], replays=True),
+        "boom": boom,
+        "batch": key([0.5, 0.25, 0.75], replays=False),
+        "replayed_later": key([4.0, 5.0, 6.0], replays=True),
+    }
+    timings, breakdown = bench.measure(spark, "sf", queries, list(queries), 3)
+
+    assert timings == {
+        "replayed": 1.0, "boom": -1.0, "batch": 0.25, "replayed_later": 4.0,
+    }
+    assert len(cleared) == len(released) == len(queries)
+    assert set(breakdown) == {"replayed", "replayed_later"}
+    assert breakdown["replayed"]["stream_sec"] == 1.0
+    assert breakdown["replayed_later"] == {
+        "prep_sec": 0.0, "stream_sec": 4.0, "sink_sec": 0.0, "n_replays": 1,
+    }

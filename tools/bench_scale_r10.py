@@ -1,5 +1,6 @@
-"""Scale-up evidence for the r10/r11 key families (VERDICT r10 item 7,
-r11 item 6): run the ACTUAL registered keys at 1× and 10×.
+"""Scale-up evidence for the r10/r11/r12 key families (VERDICT r10
+item 7, r11 item 6, r12 item 9): run the ACTUAL registered keys at 1×
+and 10×.
 
 Unlike `bench_scale.py` (which re-states flagship plan SHAPES over
 replicated DataFrames), this harness materializes a replicated
@@ -11,10 +12,10 @@ key functions on it. That validates the cached-edge-list,
 ordered-fold, and bounded-collect claims off-SF on the same code path
 the gate checks.
 
-    python tools/bench_scale_r10.py [sf_dir] [factor] [r10|r11|all]
+    python tools/bench_scale_r10.py [sf_dir] [factor] [r10|r11|r12|all]
 
-`run_scale_r10(spark, sf_dir, factor)` / `run_scale_r11(...)` are the
-embeddable forms bench.py / BENCH_EXTRAS recording fold in.
+`run_scaled_keys(spark, sf_dir, which, factor)` is the one runner; the
+CLI and bench.py (the `scale10_r10/r11/r12` extras) both call it.
 """
 
 from __future__ import annotations
@@ -29,44 +30,46 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-KEYS = [
-    "graph_label_propagation",
-    "graph_lpa_modularity",
-    "graph_kcore_decomposition",
-    "graph_hits_scores",
-    "survival_kaplan_meier",
-    "survival_median_landmarks",
-    "cohort_ltv_curves",
-]
-
-# r11 families whose bounded-collect claims get validated off-SF
-# (VERDICT r11 item 6): 10× embeddings grows the Gram/kNN builds,
-# 10× events grows the Markov session fan-in, 10× customer grows the
-# bootstrap population.
-KEYS_R11 = [
-    "sim_bitext_margin_knn",
-    "emb_pca_power_iteration",
-    "events_markov_attribution",
-    "eval_bootstrap_ci_hash",
-]
-
-# r12 heavy keys (VERDICT r12 item 9): the keys the r12 optimization
-# round rebuilt — their §2.5 "fan-out is a no-op at scale" and cache-
-# size claims were argued from threshold arithmetic, not measured.
-# 10× customer grows the FS pair fan, 10× orders/lineitem the
-# Yannakakis semijoin program, 10× documents the CDC/simhash/Burrows
-# corpora; plus the mid-tier keys whose scale posture was asserted
-# only at sf0.1 (VERDICT item 3).
-KEYS_R12 = [
-    "er_fellegi_sunter_weights",
-    "join_yannakakis_program",
-    "docs_cdc_chunk_dedup",
-    "text_simhash_hamming_prod",
-    "text_burrows_delta",
-    "eval_conformal_interval",
-    "vocab_good_turing_counts",
-    "eval_isotonic_calibration",
-]
+# The registered keys each round's scale claims rest on, by round tag.
+KEYS = {
+    # graph community loops, survival curves, LTV cohorts
+    "r10": [
+        "graph_label_propagation",
+        "graph_lpa_modularity",
+        "graph_kcore_decomposition",
+        "graph_hits_scores",
+        "survival_kaplan_meier",
+        "survival_median_landmarks",
+        "cohort_ltv_curves",
+    ],
+    # r11 families whose bounded-collect claims get validated off-SF
+    # (VERDICT r11 item 6): 10× embeddings grows the Gram/kNN builds,
+    # 10× events grows the Markov session fan-in, 10× customer grows
+    # the bootstrap population.
+    "r11": [
+        "sim_bitext_margin_knn",
+        "emb_pca_power_iteration",
+        "events_markov_attribution",
+        "eval_bootstrap_ci_hash",
+    ],
+    # r12 heavy keys (VERDICT r12 item 9): the keys the r12
+    # optimization round rebuilt — their §2.5 "fan-out is a no-op at
+    # scale" and cache-size claims were argued from threshold
+    # arithmetic, not measured. 10× customer grows the FS pair fan,
+    # 10× orders/lineitem the Yannakakis semijoin program, 10×
+    # documents the CDC/simhash/Burrows corpora; plus the mid-tier keys
+    # whose scale posture was asserted only at sf0.1 (VERDICT item 3).
+    "r12": [
+        "er_fellegi_sunter_weights",
+        "join_yannakakis_program",
+        "docs_cdc_chunk_dedup",
+        "text_simhash_hamming_prod",
+        "text_burrows_delta",
+        "eval_conformal_interval",
+        "vocab_good_turing_counts",
+        "eval_isotonic_calibration",
+    ],
+}
 
 _SHIFT = 10_000_000
 
@@ -155,10 +158,13 @@ def _materialize_scaled(spark, sf_dir: str, factor: int) -> str:
     return out
 
 
-def _run_keys(spark, sf_dir: str, factor: int, keys) -> dict:
+def run_scaled_keys(spark, sf_dir: str, which: str, factor: int = 10) -> dict:
+    """Time each key of round `which` (`r10`/`r11`/`r12`, or `all` of
+    them) once at 1× and once at `factor`× and record the ratio."""
     from target_s3_parquet_spark.operators._util import release_rank_caches
     from target_s3_parquet_spark.registry import get_queries
 
+    keys = sum(KEYS.values(), []) if which == "all" else KEYS[which]
     queries = get_queries()
     scaled = _materialize_scaled(spark, sf_dir, factor)
     out: dict = {"factor": factor}
@@ -179,18 +185,6 @@ def _run_keys(spark, sf_dir: str, factor: int, keys) -> dict:
     return out
 
 
-def run_scale_r10(spark, sf_dir: str, factor: int = 10) -> dict:
-    return _run_keys(spark, sf_dir, factor, KEYS)
-
-
-def run_scale_r11(spark, sf_dir: str, factor: int = 10) -> dict:
-    return _run_keys(spark, sf_dir, factor, KEYS_R11)
-
-
-def run_scale_r12(spark, sf_dir: str, factor: int = 10) -> dict:
-    return _run_keys(spark, sf_dir, factor, KEYS_R12)
-
-
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     factor = int(sys.argv[2]) if len(sys.argv) > 2 else 10
@@ -199,13 +193,7 @@ def main() -> None:
     from target_s3_parquet_spark.session import get_spark
 
     spark = get_spark("bench_scale_r10")
-    keys = {
-        "r10": KEYS,
-        "r11": KEYS_R11,
-        "r12": KEYS_R12,
-        "all": KEYS + KEYS_R11 + KEYS_R12,
-    }[which]
-    print(json.dumps(_run_keys(spark, sf_dir, factor, keys)))
+    print(json.dumps(run_scaled_keys(spark, sf_dir, which, factor)))
 
 
 if __name__ == "__main__":
