@@ -36,7 +36,7 @@ import json
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, Row, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -73,17 +73,11 @@ class SingerError(ValueError):
 
 @dataclass
 class StreamPlan:
-    """Control-plane state for one stream: its JSON schema, derived
-    StructType, and key properties."""
+    """Control-plane state for one stream: JSON schema, key properties."""
 
     stream: str
     json_schema: dict[str, Any]
     key_properties: list[str] = field(default_factory=list)
-    compat: bool = False
-
-    @property
-    def struct(self) -> T.StructType:
-        return jsonschema_to_spark(self.json_schema, compat=self.compat)
 
 
 def read_message_log(spark: SparkSession, path: str) -> DataFrame:
@@ -107,7 +101,8 @@ def parse_message_lines(raw: DataFrame, line_col: str = "value") -> DataFrame:
     envelope ``type`` (a bare number or string is valid JSON yet not a
     Singer message — the reference's ``singer.parse_message`` raises on
     any such line, so silently dropping it would diverge). Repeated
-    keys are not corrupt: like ``json.loads``, the last one wins."""
+    keys are not corrupt: like ``json.loads``, the last one wins.
+    ``_file`` (source file, '' for none) is taken here, before caching."""
     line = F.col(line_col)
     m = F.from_json(
         line,
@@ -116,6 +111,7 @@ def parse_message_lines(raw: DataFrame, line_col: str = "value") -> DataFrame:
     )
     return raw.select(line.alias("_raw"), m.alias("m")).select(
         "_raw",
+        F.input_file_name().alias("_file"),
         "m.type",
         "m.stream",
         F.col("m.record").alias("record_json"),
@@ -131,16 +127,18 @@ def parse_message_lines(raw: DataFrame, line_col: str = "value") -> DataFrame:
     )
 
 
-def control_plane_rows(messages: DataFrame) -> list[Row]:
+def control_plane_rows(messages: DataFrame) -> list[dict]:
     """The one control-plane aggregate: a row per (type, stream) with its
     first/last line, the last schema/state/key_properties/version and
-    whether any of its lines is corrupt. O(types x streams) rows reach
-    the driver, never O(records); every control-plane reader (plans,
-    final STATE, activations, streaming schema changes) derives from
-    these rows."""
-    return (
+    whether any of its lines is corrupt; every control-plane reader
+    (plans, final STATE, activations, streaming schema changes) derives
+    from these O(types x streams x files) rows. A line's position is
+    (file name, row id): row ids follow Spark's packing of files into
+    partitions, largest first, so Spark aggregates per file and the
+    driver merges the files in name order."""
+    per_file = (
         messages.withColumn("_line", F.monotonically_increasing_id())
-        .groupBy("type", "stream")
+        .groupBy("type", "stream", "_file")
         .agg(
             F.min("_line").alias("first_line"),
             F.max("_line").alias("last_line"),
@@ -152,15 +150,25 @@ def control_plane_rows(messages: DataFrame) -> list[Row]:
         )
         .collect()
     )
+    rows: dict[tuple, dict] = {}
+    for r in sorted(per_file, key=lambda r: r["_file"]):
+        prev = rows.get((r["type"], r["stream"]))
+        rows[r["type"], r["stream"]] = {
+            **r.asDict(),
+            "first_line": prev["first_line"] if prev else (r["_file"], r["first_line"]),
+            "last_line": (r["_file"], r["last_line"]),
+            "corrupt": max(r["corrupt"], prev["corrupt"] if prev else 0),
+        }
+    return list(rows.values())
 
 
-def final_state(rows: list[Row]) -> str | None:
+def final_state(rows: list[dict]) -> str | None:
     """R13: the value of the log's last STATE message."""
     states = [r for r in rows if r["type"] == "STATE"]
     return max(states, key=lambda r: r["last_line"])["state_json"] if states else None
 
 
-def activations_from(rows: list[Row]) -> dict[str, int]:
+def activations_from(rows: list[dict]) -> dict[str, int]:
     """L5: the last ACTIVATE_VERSION's version per stream."""
     return {
         r["stream"]: int(r["version"])
@@ -171,13 +179,29 @@ def activations_from(rows: list[Row]) -> dict[str, int]:
     }
 
 
-def collect_control_plane(messages: DataFrame) -> tuple[dict[str, StreamPlan], str | None, list[str]]:
+def check_control_plane(rows: list[dict], declared=()) -> None:
+    """Fail fast like the reference's consumer: raise on a corrupt line
+    (R2) or on a RECORD whose stream has no earlier SCHEMA (R5); streams
+    in ``declared`` (a streaming job's plans) count as having one."""
+    if any(r["corrupt"] for r in rows):
+        raise SingerError("invalid JSON in message log")
+    schema_at = {r["stream"]: r["first_line"] for r in rows if r["type"] == "SCHEMA"}
+    for r in rows:
+        s = r["stream"]
+        if r["type"] == "RECORD" and s and s not in declared:
+            if s not in schema_at or r["first_line"] < schema_at[s]:
+                raise SingerError(
+                    f"A record for stream {s} was encountered before a corresponding schema"
+                )
+
+
+def collect_control_plane(messages: DataFrame) -> tuple[dict[str, StreamPlan], str | None, list[dict]]:
     """Driver-side control plane from the one ``(type, stream)``
     aggregate: build per-stream plans and find the final STATE value
     (R13: only the last one matters).
 
-    Returns (plans, last_state_json, stream_names); a corrupt line or a
-    RECORD before its stream's first SCHEMA (R5) raises.
+    Returns (plans, last_state_json, control-plane rows), after
+    ``check_control_plane`` passes the rows.
 
     Schema-evolution policy (SURVEY hard part #4): the reference
     validates each record under the schema in force at its log
@@ -189,31 +213,18 @@ def collect_control_plane(messages: DataFrame) -> tuple[dict[str, StreamPlan], s
     ``SingerStreamJob.observed_schema_changes`` and restarts).
     """
     rows = control_plane_rows(messages)
-    if any(r["corrupt"] for r in rows):
-        raise SingerError("invalid JSON in message log")
-
-    plans: dict[str, StreamPlan] = {}
-    first_schema_line: dict[str, int] = {}
-    for r in rows:
-        if r["type"] == "SCHEMA" and r["stream"]:
-            # later SCHEMAs replace earlier ones (reference __init__.py:241)
-            plans[r["stream"]] = StreamPlan(
-                stream=r["stream"],
-                json_schema=json.loads(r["schema_json"] or "{}"),
-                key_properties=list(r["key_properties"] or []),
-            )
-            first_schema_line[r["stream"]] = r["first_line"]
-
-    # R5: RECORD before its stream's SCHEMA is a hard error.
-    for r in rows:
-        if r["type"] == "RECORD" and r["stream"]:
-            sline = first_schema_line.get(r["stream"])
-            if sline is None or r["first_line"] < sline:
-                raise SingerError(
-                    f"A record for stream {r['stream']} was encountered "
-                    f"before a corresponding schema"
-                )
-    return plans, final_state(rows), list(plans)
+    check_control_plane(rows)
+    # later SCHEMAs replace earlier ones (reference __init__.py:241)
+    plans = {
+        r["stream"]: StreamPlan(
+            stream=r["stream"],
+            json_schema=json.loads(r["schema_json"] or "{}"),
+            key_properties=list(r["key_properties"] or []),
+        )
+        for r in rows
+        if r["type"] == "SCHEMA" and r["stream"]
+    }
+    return plans, final_state(rows), rows
 
 
 def _compile_validators(
@@ -304,7 +315,7 @@ def records_for_stream(
     ``_sdc_table_version`` (L5 ACTIVATE_VERSION support — pipelinewise
     full-table syncs stamp every record with the sync's version).
     """
-    plan = StreamPlan(plan.stream, plan.json_schema, plan.key_properties, compat)
+    struct = jsonschema_to_spark(plan.json_schema, compat=compat)
     recs = messages.filter(
         (F.col("type") == "RECORD") & (F.col("stream") == plan.stream)
     )
@@ -332,7 +343,7 @@ def records_for_stream(
         else []
     )
     typed = recs.select(
-        F.from_json(rec, plan.struct).alias("r"),
+        F.from_json(rec, struct).alias("r"),
         err.alias("_validation_error"),
         F.col("time_extracted"),
         *version_cols,
@@ -347,7 +358,7 @@ def records_for_stream(
                         F.lit(f"validation failed for stream {plan.stream}: "),
                         F.col("_validation_error"),
                     )
-                ).cast(plan.struct),
+                ).cast(struct),
             ).otherwise(F.col("r")),
         )
 
@@ -375,14 +386,6 @@ def records_for_stream(
     if validate != "permissive":
         flat = flat.drop("_validation_error")
     return flat.drop("time_extracted")
-
-
-def collect_activations(messages: DataFrame) -> dict[str, int]:
-    """L5: last ACTIVATE_VERSION per stream (reference `__init__.py:
-    144-145` logs-and-drops these; SURVEY §2A maps L5 to version-column
-    + dynamic partition overwrite, which the sink implements), read off
-    the control-plane aggregate: O(streams)."""
-    return activations_from(control_plane_rows(messages))
 
 
 def ingest(

@@ -20,6 +20,8 @@ from target_s3_parquet_spark.operators._util import t
 from target_s3_parquet_spark.registry import query
 from target_s3_parquet_spark.sources.singer import (
     StreamPlan,
+    activations_from,
+    control_plane_rows,
     parse_message_lines,
     records_for_stream,
 )
@@ -147,8 +149,6 @@ def singer_activate_version(spark, sf_dir):
     exercised on disk by tests/test_singer.py)."""
     import json as _json
 
-    from target_s3_parquet_spark.sources.singer import collect_activations
-
     o = t(spark, sf_dir, "orders")
 
     def lines(pred, version):
@@ -181,7 +181,7 @@ def singer_activate_version(spark, sf_dir):
     messages = parse_message_lines(v1.unionAll(v2).unionAll(activate))
     plan = StreamPlan(stream="orders", json_schema=_AV_SCHEMA)
     recs = records_for_stream(messages, plan, validate="strict", with_version=True)
-    active = collect_activations(messages)["orders"]
+    active = activations_from(control_plane_rows(messages))["orders"]
     return recs.filter(
         F.coalesce(F.col("_sdc_table_version"), F.lit(active)) == active
     ).withColumn("id", F.col("id").cast("long"))

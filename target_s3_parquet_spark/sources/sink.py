@@ -25,7 +25,7 @@ files near the row-group sweet spot instead of task-count-many shards).
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -97,7 +97,9 @@ def write_stream_parquet(
 ) -> str:
     """Write one stream's flattened records to
     ``{path}/[stream=<stream>/][dt=<date>/]*.parquet`` — or, when
-    ``cfg.naming_convention`` is set, to the resolved template path."""
+    ``cfg.naming_convention`` is set, to the resolved template path.
+    The sink's one Parquet write: ``cfg``'s mode, codec (R12) and
+    file-size cap (R9)."""
     out = df
     partition_cols: list[str] = []
     path = cfg.path
@@ -143,23 +145,29 @@ def activate_version_swap(
             "activate_version requires partition_by_stream: the swap "
             "overwrites exactly one stream=... partition"
         )
-    out = df.filter(
-        F.coalesce(F.col("_sdc_table_version"), F.lit(version)) == version
-    ).withColumn("stream", F.lit(stream))
+    out = df.filter(F.coalesce(F.col("_sdc_table_version"), F.lit(version)) == version)
+    # an overwrite of exactly the stream=<stream> partition
+    swap = replace(cfg, mode="overwrite", date_partition=False, naming_convention=None)
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        writer = (
-            out.write.mode("overwrite")
-            .option("compression", cfg.normalized_codec())
-            .partitionBy("stream")
-        )
-        if cfg.max_records_per_file and cfg.max_records_per_file > 0:
-            writer = writer.option("maxRecordsPerFile", cfg.max_records_per_file)
-        writer.parquet(cfg.path)
+        return write_stream_parquet(out, stream, swap)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return os.path.join(cfg.path, f"stream={stream}")
+
+
+def write_streams(
+    frames: dict[str, DataFrame], activations: dict[str, int], cfg: SinkConfig
+) -> list[str]:
+    """The batch target's and the streaming job's one per-stream writer:
+    with ``cfg.activate_version``, a stream in ``activations`` gets the
+    L5 swap, every other one ``write_stream_parquet``. Returns paths."""
+    return [
+        activate_version_swap(df.sparkSession, df, s, activations[s], cfg)
+        if cfg.activate_version and s in activations
+        else write_stream_parquet(df, s, cfg)
+        for s, df in frames.items()
+    ]
 
 
 def run_singer_to_parquet(
@@ -173,36 +181,18 @@ def run_singer_to_parquet(
     """EP1/EP2/EP3 end-to-end (reference ``main``→``persist_messages``→
     ``consumer``): ingest the log, write every stream, THEN return the
     final state — state must only be emitted after all writes commit
-    (at-least-once, reference ``__init__.py:353-357``). With
-    ``cfg.activate_version``, streams carrying an ACTIVATE_VERSION
-    message get the L5 version swap instead of an append."""
-    from target_s3_parquet_spark.sources.singer import (
-        collect_activations,
-        collect_control_plane,
-        read_message_log,
-        records_for_stream,
-    )
+    (at-least-once, reference ``__init__.py:353-357``)."""
+    from target_s3_parquet_spark.sources import singer
 
-    messages = read_message_log(spark, message_log_path)
-    plans, state, _ = collect_control_plane(messages)
-    activations = collect_activations(messages) if cfg.activate_version else {}
-    written = []
-    for s, p in plans.items():
-        df = records_for_stream(
-            messages,
-            p,
-            validate,
-            add_metadata,
-            compat,
-            with_version=cfg.activate_version,
+    messages = singer.read_message_log(spark, message_log_path)
+    plans, state, control = singer.collect_control_plane(messages)
+    frames = {
+        s: singer.records_for_stream(
+            messages, p, validate, add_metadata, compat, with_version=cfg.activate_version
         )
-        if s in activations:
-            written.append(
-                activate_version_swap(spark, df, s, activations[s], cfg)
-            )
-        else:
-            written.append(write_stream_parquet(df, s, cfg))
-    return written, state
+        for s, p in plans.items()
+    }
+    return write_streams(frames, singer.activations_from(control), cfg), state
 
 
 def emit_state(state: str | None) -> None:

@@ -8,12 +8,16 @@ producer/consumer processes + final-state-on-stdout (R13/R14):
   place on crash and re-uploads — at-least-once with no recovery log).
 - STATE bookmarks are recorded per epoch AFTER the epoch's writes
   commit, so a restart resumes from the last durable bookmark.
-- Stream fan-out happens inside one micro-batch write (partitionBy),
-  not one file per contiguous run.
+- Each epoch writes every known stream through the batch target's
+  writer (``sink.write_streams``). Its lines are ordered by file name,
+  then position, so its bookmark is its last-named file's last STATE.
+- An epoch with a corrupt line, or a RECORD of a stream neither planned
+  nor given a SCHEMA earlier in the epoch, fails the query before any
+  write or STATE, as the batch target fails the run.
 
 Schema handling: SCHEMA messages must be known before the stream
 starts (they define the output StructTypes); a mid-run SCHEMA change
-lands in ``_schema_evolution`` for the operator to restart with — the
+lands in ``observed_schema_changes`` for the operator to restart with — the
 explicit policy SURVEY §7 'hard parts #4' calls for.
 """
 
@@ -24,16 +28,17 @@ import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from target_s3_parquet_spark.sources.singer import (
     StreamPlan,
     activations_from,
+    check_control_plane,
     control_plane_rows,
     final_state,
     parse_message_lines,
     records_for_stream,
 )
+from target_s3_parquet_spark.sources.sink import SinkConfig, write_streams
 
 
 @dataclass
@@ -65,42 +70,24 @@ class SingerStreamJob:
         messages = parse_message_lines(batch)
         messages.cache()
         try:
-            # control plane: ONE O(types x streams) collect per epoch
-            # serves activations, the final STATE and schema changes
+            # control plane: ONE collect per epoch serves the checks (run
+            # before any write), activations, final STATE, schema changes
             control = control_plane_rows(messages)
-            activations = activations_from(control) if self.activate_version else {}
-            # data plane: every known stream, one partitioned write
-            for stream, plan in self.plans.items():
-                flat = records_for_stream(
+            check_control_plane(control, declared=self.plans)
+            frames = {
+                stream: records_for_stream(
                     messages,
                     plan,
                     validate=self.validate,
                     compat=self.compat,
                     with_version=self.activate_version,
                 )
-                if stream in activations:
-                    from target_s3_parquet_spark.sources.sink import (
-                        SinkConfig,
-                        activate_version_swap,
-                    )
-
-                    activate_version_swap(
-                        flat.sparkSession,
-                        flat,
-                        stream,
-                        activations[stream],
-                        SinkConfig(
-                            path=self.output_path, compression=self.compression
-                        ),
-                    )
-                    continue
-                (
-                    flat.withColumn("stream", F.lit(stream))
-                    .write.mode("append")
-                    .option("compression", self.compression)
-                    .partitionBy("stream")
-                    .parquet(self.output_path)
-                )
+                for stream, plan in self.plans.items()
+            }
+            cfg = SinkConfig(
+                self.output_path, self.compression, activate_version=self.activate_version
+            )
+            write_streams(frames, activations_from(control), cfg)
             # record the epoch's final STATE *after* the writes above
             # committed (R13 ordering)
             state_val = final_state(control)

@@ -74,20 +74,54 @@ def test_state_is_last_one(spark, log3):
     }
 
 
-def test_invalid_json_raises(spark, tmp_path):
-    from target_s3_parquet_spark.sources.singer import SingerError
+_USERS_PLAN = {"app-users": fx.USERS_SCHEMA}
 
-    p = fx.write_log(str(tmp_path), fx.invalid_json_log())
-    with pytest.raises(SingerError, match="invalid JSON"):
+
+def _fails_alike(spark, tmp_path, lines, match, declared):
+    """Batch and stream fail the same way on one bad log. The batch
+    ingest raises ``SingerError``; a ``SingerStreamJob`` draining the
+    log (with plans for the ``declared`` streams) fails its query with
+    the same message, having written nothing and recorded no STATE."""
+    from target_s3_parquet_spark.sources.singer import SingerError, StreamPlan
+    from target_s3_parquet_spark.streaming.singer_stream import (
+        SingerStreamJob,
+        latest_state,
+    )
+
+    log_dir = tmp_path / "log"
+    log_dir.mkdir()
+    p = fx.write_log(str(log_dir), lines)
+    with pytest.raises(SingerError, match=match):
         _ingest(spark, p)
+
+    out, sdir = tmp_path / "out", str(tmp_path / "state")
+    job = SingerStreamJob(
+        plans={s: StreamPlan(s, schema) for s, schema in declared.items()},
+        output_path=str(out),
+        checkpoint_path=str(tmp_path / "ckpt"),
+        state_dir=sdir,
+    )
+    q = job.start(spark, str(log_dir))
+    try:
+        with pytest.raises(Exception, match=match) as failed:
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    assert "SingerError" in str(failed.value)
+    assert not out.exists()
+    assert latest_state(sdir) is None
+
+
+def test_invalid_json_raises(spark, tmp_path):
+    _fails_alike(spark, tmp_path, fx.invalid_json_log(), "invalid JSON", _USERS_PLAN)
 
 
 def test_record_before_schema_raises(spark, tmp_path):
-    from target_s3_parquet_spark.sources.singer import SingerError
-
-    p = fx.write_log(str(tmp_path), fx.record_before_schema_log())
-    with pytest.raises(SingerError, match="before a corresponding schema"):
-        _ingest(spark, p)
+    # the stream job has no plan for the stream, so only an earlier
+    # SCHEMA in the epoch could declare it
+    _fails_alike(
+        spark, tmp_path, fx.record_before_schema_log(), "before a corresponding schema", {}
+    )
 
 
 def test_validation_strict_raises(spark, tmp_path):
@@ -147,23 +181,32 @@ def test_schema_replacement_last_wins(spark, tmp_path):
     assert rows[1]["b"] is None and rows[2]["b"] == "x"
 
 
-def test_activate_version_swaps_table(spark, tmp_path):
+def test_activate_version_swaps_table(spark, tmp_path, monkeypatch):
     """L5 upgrade path (reference logs-and-drops ACTIVATE_VERSION,
     __init__.py:144-145): a v2 full re-sync + ACTIVATE_VERSION must
     atomically replace the stream's rows via dynamic partition
-    overwrite, leaving other streams untouched."""
+    overwrite, leaving other streams untouched. Each run reads its
+    control plane (plans, STATE, activations) off ONE aggregate."""
+    from target_s3_parquet_spark.sources import singer
     from target_s3_parquet_spark.sources.sink import SinkConfig, run_singer_to_parquet
 
+    aggregates = []
+    real = singer.control_plane_rows
+    monkeypatch.setattr(
+        singer, "control_plane_rows", lambda m: aggregates.append(m) or real(m)
+    )
     run1, run2 = fx.activate_version_logs()
     out = str(tmp_path / "out")
     cfg = SinkConfig(path=out, activate_version=True)
 
     run_singer_to_parquet(spark, fx.write_log(str(tmp_path), run1, "r1.jsonl"), cfg)
+    assert len(aggregates) == 1
     users = spark.read.parquet(out).filter("stream = 'app-users'")
     assert sorted(r["id"] for r in users.select("id").collect()) == [1, 2, 3]
     assert users.select("_sdc_table_version").distinct().collect()[0][0] == 1
 
     run_singer_to_parquet(spark, fx.write_log(str(tmp_path), run2, "r2.jsonl"), cfg)
+    assert len(aggregates) == 2
     back = spark.read.parquet(out)
     users2 = back.filter("stream = 'app-users'")
     # the swap: v1's rows (1,2,3) are superseded by v2's full table (2,4)
@@ -226,13 +269,8 @@ def test_non_message_json_line_is_corrupt(spark, tmp_path):
     """A bare number/string is valid JSON but not a Singer message —
     the reference's parse_message raises; silently dropping it would
     diverge (ADVICE r1)."""
-    from target_s3_parquet_spark.sources.singer import SingerError
-
     lines = fx.three_stream_log()[:4] + ["42"]
-    import pytest as _pytest
-
-    with _pytest.raises(SingerError):
-        _ingest(spark, fx.write_log(str(tmp_path), lines))
+    _fails_alike(spark, tmp_path, lines, "invalid JSON", _USERS_PLAN)
 
 
 def _raw_log(tmp_path, name, schema, records):
@@ -306,9 +344,6 @@ def test_validation_plan_grows_linearly_with_checks(spark):
 def test_truncated_line_is_corrupt(spark, tmp_path):
     """A line cut off mid-write still yields its leading envelope fields
     from a lenient parse; it must fail the run all the same."""
-    from target_s3_parquet_spark.sources.singer import SingerError
-
     lines = fx.three_stream_log()[:4]
     lines.append(lines[3][:-2])
-    with pytest.raises(SingerError, match="invalid JSON"):
-        _ingest(spark, fx.write_log(str(tmp_path), lines))
+    _fails_alike(spark, tmp_path, lines, "invalid JSON", _USERS_PLAN)

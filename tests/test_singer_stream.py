@@ -114,3 +114,37 @@ def test_known_stream_reschema_surfaces_evolution(spark, tmp_path):
     q2.processAllAvailable()
     q2.stop()
     assert "app-users" in job.observed_schema_changes
+
+
+def test_epoch_state_follows_file_names(spark, tmp_path):
+    """Two files in one epoch, each ending with a STATE: the bookmark is
+    the later-named file's STATE, even though that file is the larger
+    one, which Spark packs into the first partition."""
+    from target_s3_parquet_spark.sources.singer import StreamPlan
+    from target_s3_parquet_spark.streaming.singer_stream import (
+        SingerStreamJob,
+        latest_state,
+    )
+
+    log_dir = tmp_path / "log"
+    log_dir.mkdir()
+
+    def chunk(ids):
+        recs = [fx._msg(type="RECORD", stream="app-users", record={"id": i}) for i in ids]
+        return recs + [fx._msg(type="STATE", value={"pos": ids[-1]})]
+
+    fx.write_log(str(log_dir), chunk([1]), "a.jsonl")
+    fx.write_log(str(log_dir), chunk(list(range(2, 50))), "b.jsonl")
+    sdir = str(tmp_path / "state")
+    job = SingerStreamJob(
+        plans={"app-users": StreamPlan("app-users", fx.USERS_SCHEMA)},
+        output_path=str(tmp_path / "out"),
+        checkpoint_path=str(tmp_path / "ckpt"),
+        state_dir=sdir,
+    )
+    q = job.start(spark, str(log_dir), max_files_per_trigger=2)
+    q.processAllAvailable()
+    q.stop()
+    assert len(os.listdir(sdir)) == 1  # one epoch
+    assert json.loads(latest_state(sdir)) == {"pos": 49}
+    assert spark.read.parquet(str(tmp_path / "out")).count() == 49

@@ -53,7 +53,7 @@ def main() -> None:
         parse_message_lines,
         records_for_stream,
     )
-    from target_s3_parquet_spark.sources.sink import SinkConfig, write_stream_parquet
+    from target_s3_parquet_spark.sources.sink import SinkConfig, write_streams
 
     spark = get_spark("bench_ingest")
     tmp = tempfile.mkdtemp(prefix="ingest_bench_")
@@ -104,13 +104,10 @@ def main() -> None:
         streams = {
             s: records_for_stream(messages, p) for s, p in plans.items()
         }
-        out_rows = 0
-        out_path = os.path.join(tmp, "out")
-        for name, df in streams.items():
-            written = write_stream_parquet(
-                df, name, SinkConfig(path=out_path, compression="zstd")
-            )
-            out_rows += spark.read.parquet(written).count()
+        written = write_streams(
+            streams, {}, SinkConfig(path=os.path.join(tmp, "out"), compression="zstd")
+        )
+        out_rows = sum(spark.read.parquet(w).count() for w in written)
         wall = time.time() - t0
         assert out_rows == n, f"{out_rows} != {n}"
         print(
