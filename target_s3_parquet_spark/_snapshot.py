@@ -73,8 +73,8 @@ def snapshot_persisted(df: DataFrame, name: str = "snap") -> DataFrame:
 
 def snapshot(df: DataFrame, max_driver_rows: int = 10_000) -> DataFrame:
     """Size-routing snapshot for harness code that serves BOTH bounded
-    and data-proportional results (the generic streaming replay): probe
-    up to the cap; within it, the probe rows ARE the result (cheap
+    and data-proportional results (the memory sink of
+    `streaming.replay.replay_stream`): probe up to the cap; within it, the probe rows ARE the result (cheap
     driver round-trip, nothing recomputed), beyond it, route to the
     executor-side persisted copy. The routing decision only needs
     "over cap or not", so the probe cap is deliberately modest — a

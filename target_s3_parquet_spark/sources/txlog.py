@@ -491,7 +491,8 @@ def txlog_merge_prune(spark, sf_dir):
 
         final = _read_manifest(root, latest_version(root))
         lower_dir = _read_manifest(root, 0)["dirs"][0]
-        assert lower_dir in final["dirs"], "lower-half dir should be pruned, not rewritten"
+        if lower_dir not in final["dirs"]:
+            raise RuntimeError("lower-half dir should be pruned, not rewritten")
 
         snap = read_table(spark, root)
         out = snap.agg(
@@ -992,7 +993,8 @@ def txlog_vacuum_retention(spark, sf_dir):
         pre = phase_row("pre", on_disk())
         pre = snapshot_small(pre)  # materialize BEFORE files vanish
         removed = vacuum(root, retain_versions=1, retention_seconds=0)
-        assert len(removed) == 4, removed
+        if len(removed) != 4:
+            raise RuntimeError(removed)
         post = phase_row("post", on_disk())
         out = pre.unionAll(post)
         return snapshot_small(out)

@@ -1,6 +1,8 @@
 """Structured Streaming operators (SURVEY §2B streaming table), each
 run to quiescence over a chunked replay of the ``events`` table so the
 driver gets a plain DataFrame back.
+Chunking, draining and foreachBatch folds all go through
+`streaming/replay.py`.
 
 Output-mode discipline: results must be invariant to micro-batch
 boundaries for the oracle to hold — windowed aggregations run in
@@ -14,33 +16,14 @@ from pyspark.sql import functions as F
 
 from target_s3_parquet_spark._snapshot import snapshot_persisted, snapshot_small
 
-from target_s3_parquet_spark.operators._util import (
-    dec,
-    ntile_from_rank,
-    t,
-    two_phase_rank,
-)
+from target_s3_parquet_spark.operators._util import dec, t
 from target_s3_parquet_spark.registry import query
-from target_s3_parquet_spark.streaming.replay import replay_stream, stream_conf
-
-
-def _chunk_by_ntile3(events):
-    """``_chunk`` = NTILE(3) OVER (ORDER BY ts, event_id) - 1, computed
-    with `two_phase_rank` + the closed-form `ntile_from_rank` instead of
-    a single-task global-sort window. The (ts, event_id) tiebreak is a
-    total order, so membership is bit-identical to the window function —
-    which matters to the keys whose ORACLE restates epoch membership
-    (per-epoch metrics). Returns a CACHED frame (consistent chunk reads
-    across the per-chunk writes); caller unpersists."""
-    n = events.count()
-    return (
-        two_phase_rank(events, ["ts", "event_id"])
-        .withColumn(
-            "_chunk", ntile_from_rank(F.col("rnk"), F.lit(n), 3) - 1
-        )
-        .drop("rnk")
-        .cache()
-    )
+from target_s3_parquet_spark.streaming.replay import (
+    chunk_replay,
+    drain,
+    fold_replay,
+    replay_stream,
+)
 
 
 @query(
@@ -101,12 +84,7 @@ def stream_singer_ingest(spark, sf_dir):
             output_path=f"{tmp}/out",
             checkpoint_path=f"{tmp}/ckpt",
         )
-        with stream_conf(spark):
-            q = job.start(spark, f"{log_dir}/*", max_files_per_trigger=2)
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+        drain(spark, lambda: job.start(spark, f"{log_dir}/*", max_files_per_trigger=2))
         back = spark.read.parquet(f"{tmp}/out").withColumn(
             "id", F.col("id").cast("long")
         )
@@ -486,12 +464,7 @@ def stream_activate_version(spark, sf_dir):
             checkpoint_path=f"{tmp}/ckpt",
             activate_version=True,
         )
-        with stream_conf(spark):
-            q = job.start(spark, f"{log_dir}/*", max_files_per_trigger=1)
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+        drain(spark, lambda: job.start(spark, f"{log_dir}/*", max_files_per_trigger=1))
         back = (
             spark.read.parquet(f"{tmp}/out")
             .select(
@@ -618,71 +591,28 @@ def stream_foreachbatch_upsert(spark, sf_dir):
     invariant — which is what the batch oracle (latest event per user)
     verifies. The read-union-overwrite here is the toy-scale stand-in
     for a Delta/Iceberg MERGE or dynamic partition overwrite; the
-    dataflow (dedup-within-batch, then key-join against the snapshot)
-    is the real shape."""
-    import os
-    import shutil
-    import tempfile
-
+    dataflow (the batch keyed against the snapshot, latest row per key
+    kept) is the real shape."""
     from pyspark.sql import Window as W
 
     events = t(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="fb_upsert_")
-    try:
-        stream_dir = os.path.join(tmp, "stream")
-        state_dir = os.path.join(tmp, "state")
-        # three chunks in ts order, replayed as micro-batches — exact
-        # NTILE(3) membership (the unique (ts, event_id) tiebreak makes
-        # it bit-restatable) via the two-phase rank + closed-form ntile
-        # instead of a single-task global-sort window
-        chunked = _chunk_by_ntile3(events)
-        for i in range(3):
-            chunked.filter(F.col("_chunk") == i).drop("_chunk").coalesce(
-                1
-            ).write.mode("append").parquet(stream_dir)
-        chunked.unpersist()
+    w = W.partitionBy("user_id").orderBy(
+        F.col("ts").desc(), F.col("event_id").desc()
+    )
 
-        w = W.partitionBy("user_id").orderBy(
-            F.col("ts").desc(), F.col("event_id").desc()
+    def latest(prev, batch):
+        cand = batch if prev is None else prev.unionByName(batch)
+        return (
+            cand.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .drop("rn")
         )
 
-        def merge(batch, batch_id):
-            latest = (
-                batch.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1)
-                .drop("rn")
-            )
-            if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-                prev = batch.sparkSession.read.parquet(state_dir)
-                merged = (
-                    prev.unionByName(latest)
-                    .withColumn("rn", F.row_number().over(w))
-                    .filter(F.col("rn") == 1)
-                    .drop("rn")
-                )
-            else:
-                merged = latest
-            staging = state_dir + f"._stage_{batch_id}"
-            merged.coalesce(1).write.mode("overwrite").parquet(staging)
-            if os.path.exists(state_dir):
-                shutil.rmtree(state_dir)
-            os.rename(staging, state_dir)
-
-        reader = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stream_dir)
-        )
-        q = (
-            reader.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        snap = spark.read.parquet(state_dir).select(
+    # three chunks in ts order, replayed as micro-batches — exact
+    # NTILE(3) membership (the unique (ts, event_id) tiebreak makes it
+    # bit-restatable)
+    with fold_replay(spark, events, latest, order=["ts", "event_id"]) as state:
+        snap = state.select(
             "user_id",
             F.col("ts").alias("last_ts"),
             F.col("value").alias("last_value"),
@@ -692,8 +622,6 @@ def stream_foreachbatch_upsert(spark, sf_dir):
         # executor-to-parquet (persisted copy), never through the
         # driver (the r4 review's only data-proportional collect).
         return snapshot_persisted(snap, "fb_upsert")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def scd2_merge_increment(prev, batch, w):
@@ -772,8 +700,8 @@ def stream_cdc_scd2(spark, sf_dir):
     merges new rows into the persisted CHANGE-POINT table — union the
     prior change rows with the batch, rerun the lag-dedup on the
     touched keys, atomically replace the state (batch-id staging +
-    rename = exactly-once application per epoch, the
-    `stream_foreachbatch_upsert` commit pattern).
+    rename = exactly-once application per epoch, the `fold_replay`
+    commit every foreachBatch fold shares).
 
     Why storing only CHANGE rows suffices: priorities are constant
     between change points, so a new row's keep/drop decision against
@@ -791,62 +719,18 @@ def stream_cdc_scd2(spark, sf_dir):
     with untouched state passing through join-free — is that
     pipeline's exact shape (r6 design note closed: per-epoch shuffled
     rows are O(touched + batch), not O(total change rows))."""
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window as W
 
+    order = ["o_orderdate", "o_orderkey"]
     orders = t(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderpriority", "o_orderdate", "o_orderkey"
+        "o_custkey", "o_orderpriority", *order
     )
-    tmp = tempfile.mkdtemp(prefix="fb_scd2_")
-    try:
-        stream_dir = os.path.join(tmp, "stream")
-        state_dir = os.path.join(tmp, "state")
-        n = orders.count()
-        chunked = (
-            two_phase_rank(orders, ["o_orderdate", "o_orderkey"])
-            .withColumn(
-                "_chunk", ntile_from_rank(F.col("rnk"), F.lit(n), 3) - 1
-            )
-            .drop("rnk")
-            .cache()
-        )
-        for i in range(3):
-            chunked.filter(F.col("_chunk") == i).drop("_chunk").coalesce(
-                1
-            ).write.mode("append").parquet(stream_dir)
-        chunked.unpersist()
-
-        w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-
-        def merge(batch, batch_id):
-            prev = None
-            if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-                prev = batch.sparkSession.read.parquet(state_dir)
-            changes = scd2_merge_increment(prev, batch, w)
-            staging = state_dir + f"._stage_{batch_id}"
-            changes.coalesce(1).write.mode("overwrite").parquet(staging)
-            if os.path.exists(state_dir):
-                shutil.rmtree(state_dir)
-            os.rename(staging, state_dir)
-
-        reader = (
-            spark.readStream.schema(orders.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stream_dir)
-        )
-        q = (
-            reader.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        changes = spark.read.parquet(state_dir)
+    w = W.partitionBy("o_custkey").orderBy(*order)
+    # chunked by the exact NTILE(3) over the SCD2 ordering itself
+    with fold_replay(
+        spark, orders, lambda prev, batch: scd2_merge_increment(prev, batch, w),
+        order=order,
+    ) as changes:
         valid_to = F.lead("o_orderdate").over(w)
         hist = changes.select(
             F.col("o_custkey").alias("custkey"),
@@ -858,8 +742,6 @@ def stream_cdc_scd2(spark, sf_dir):
         # one row per change point — data-proportional, so the result
         # leaves through an executor-side persisted copy
         return snapshot_persisted(hist, "fb_scd2")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -883,18 +765,9 @@ def stream_quarantine_sink(spark, sf_dir):
     and never silently disappears: it lands queryable, with the same
     schema plus the violation flag."""
     import os
-    import shutil
-    import tempfile
 
     events = t(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="dlq_")
-    try:
-        stream_dir = os.path.join(tmp, "stream")
-        for i in range(3):
-            events.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
-                "append"
-            ).parquet(stream_dir)
-
+    with chunk_replay(spark, events) as (reader, tmp):
         good_dir = os.path.join(tmp, "good")
         dlq_dir = os.path.join(tmp, "dlq")
 
@@ -908,21 +781,10 @@ def stream_quarantine_sink(spark, sf_dir):
             )
             flagged.unpersist()
 
-        reader = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stream_dir)
+        writer = reader.writeStream.foreachBatch(split).option(
+            "checkpointLocation", os.path.join(tmp, "ckpt")
         )
-        q = (
-            reader.writeStream.foreachBatch(split)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
+        drain(spark, writer.start)
         parts = []
         for d in (good_dir, dlq_dir):
             if os.path.exists(os.path.join(d, "_SUCCESS")):
@@ -933,8 +795,6 @@ def stream_quarantine_sink(spark, sf_dir):
             F.countDistinct("user_id").alias("n_users"),
         )
         return snapshot_small(out)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -957,42 +817,24 @@ def stream_available_now(spark, sf_dir):
     The complete-mode aggregate at termination must equal the batch
     aggregate over the same files, which is what the oracle checks."""
     import os
-    import shutil
-    import tempfile
     import uuid
 
     events = t(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="avnow_")
     name = "sink_" + uuid.uuid4().hex[:12]
-    try:
-        stream_dir = os.path.join(tmp, "stream")
-        for i in range(3):
-            events.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
-                "append"
-            ).parquet(stream_dir)
-        reader = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stream_dir)
-        )
+    with chunk_replay(spark, events) as (reader, tmp):
         agg = reader.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(dec(F.col("value"))).cast("double").alias("total_value"),
         )
-        with stream_conf(spark):
-            q = (
-                agg.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)  # AvailableNow terminates on its own
-        rows = spark.table(name)
-        return snapshot_small(rows)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        writer = (
+            agg.writeStream.outputMode("complete")
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
+            .trigger(availableNow=True)
+        )
+        drain(spark, writer.start)  # AvailableNow terminates on its own
+        return snapshot_small(spark.table(name))
 
 
 @query(
@@ -1082,20 +924,13 @@ def stream_python_datasource(spark, sf_dir):
                 ),
             )
         )
-        with stream_conf(spark):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option(
-                    "checkpointLocation", os.path.join(tmp, "ckpt")
-                )
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+        writer = (
+            agg.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
+        )
+        drain(spark, writer.start)
         return (
             spark.table(name)
             .select("status", "n_orders", "total_price")
@@ -1125,39 +960,23 @@ def stream_txlog_sink(spark, sf_dir):
     oracle). At 100 TB this is the standard 'streaming upsert into
     Delta' topology with the commit protocol spelled out."""
     import os
-    import shutil
-    import tempfile
 
     from target_s3_parquet_spark.sources import txlog
 
     events = t(spark, sf_dir, "events").select("event_id", "event_type", "value", "ts")
-    tmp = tempfile.mkdtemp(prefix="stream_txlog_")
-    try:
-        stream_dir = os.path.join(tmp, "stream")
-        for i in range(3):
-            events.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
-                "append"
-            ).parquet(stream_dir)
+    with chunk_replay(spark, events) as (reader, tmp):
         root = os.path.join(tmp, "tbl")
 
         def commit_batch(batch, batch_id):
             prev = txlog.latest_version(root)
             txlog.commit(batch, root, expected_prev=prev)
 
-        q = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stream_dir)
-            .writeStream.foreachBatch(commit_batch)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .start()
+        writer = reader.writeStream.foreachBatch(commit_batch).option(
+            "checkpointLocation", os.path.join(tmp, "ckpt")
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        assert txlog.latest_version(root) == 2  # one version per epoch
+        drain(spark, writer.start)
+        if txlog.latest_version(root) != 2:
+            raise RuntimeError("one version per epoch")
         snap = (
             txlog.read_table(spark, root)
             .groupBy("event_type")
@@ -1167,8 +986,6 @@ def stream_txlog_sink(spark, sf_dir):
             )
         )
         return snapshot_small(snap)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -1202,67 +1019,41 @@ def stream_epoch_metrics(spark, sf_dir):
     therefore every metric row — is exactly restatable by the batch
     oracle."""
     import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window as W
 
     events = t(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="epoch_obs_")
-    try:
-        stream_dir = os.path.join(tmp, "stream")
-        # exact NTILE(3) membership without a single-task sort — the
-        # oracle restates epoch membership, so the closed form must be
-        # (and is) bit-identical to the window function
-        chunked = _chunk_by_ntile3(events)
-        for i in range(3):
-            chunked.filter(F.col("_chunk") == i).drop("_chunk").coalesce(
-                1
-            ).write.mode("append").parquet(stream_dir)
-        chunked.unpersist()
+    metrics: list[tuple] = []
 
-        metrics: list[tuple] = []
-
-        def observe_epoch(batch, batch_id):
-            row = batch.agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(F.col("value").cast("decimal(38,6)"))
-                .cast("double")
-                .alias("total_value"),
-                F.min("event_id").alias("min_event_id"),
-                F.max("event_id").alias("max_event_id"),
-            ).collect()[0]
-            metrics.append(
-                (
-                    int(batch_id),
-                    row["n_rows"],
-                    row["total_value"],
-                    row["min_event_id"],
-                    row["max_event_id"],
-                )
+    def observe_epoch(batch, batch_id):
+        row = batch.agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(F.col("value").cast("decimal(38,6)"))
+            .cast("double")
+            .alias("total_value"),
+            F.min("event_id").alias("min_event_id"),
+            F.max("event_id").alias("max_event_id"),
+        ).collect()[0]
+        metrics.append(
+            (
+                int(batch_id),
+                row["n_rows"],
+                row["total_value"],
+                row["min_event_id"],
+                row["max_event_id"],
             )
+        )
 
-        reader = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stream_dir)
+    # exact NTILE(3) membership without a single-task sort — the oracle
+    # restates epoch membership
+    with chunk_replay(spark, events, order=["ts", "event_id"]) as (reader, tmp):
+        writer = reader.writeStream.foreachBatch(observe_epoch).option(
+            "checkpointLocation", os.path.join(tmp, "ckpt")
         )
-        q = (
-            reader.writeStream.foreachBatch(observe_epoch)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        drain(spark, writer.start)
         return spark.createDataFrame(
             metrics,
             "epoch long, n_rows long, total_value double,"
             " min_event_id long, max_event_id long",
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -1559,68 +1350,29 @@ def stream_kmv_distinct(spark, sf_dir):
     Reference scope check: codeG12/target-s3-parquet has no query
     surface (605-LoC Singer->Parquet sink); this key belongs to the
     LLM-data-pipeline extension surface (SURVEY.md §2C)."""
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window as W
 
     _K = 32
     events = t(spark, sf_dir, "events").select("event_type", "user_id")
-    tmp = tempfile.mkdtemp(prefix="fb_kmv_")
-    try:
-        stream_dir = os.path.join(tmp, "stream")
-        state_dir = os.path.join(tmp, "state")
-        # chunk membership is deliberately arbitrary (content hash) —
-        # the sketch's mergeability makes the result chunk-invariant
-        chunked = events.withColumn(
-            "_chunk",
-            F.pmod(F.xxhash64("event_type", "user_id"), F.lit(3)).cast("int"),
-        ).cache()
-        for i in range(3):
-            chunked.filter(F.col("_chunk") == i).drop("_chunk").coalesce(
-                1
-            ).write.mode("append").parquet(stream_dir)
-        chunked.unpersist()
+    h = F.expr(
+        "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 13),"
+        " 16, 10) AS BIGINT)"
+    )
+    w = W.partitionBy("event_type").orderBy("h")
 
-        h = F.expr(
-            "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 13),"
-            " 16, 10) AS BIGINT)"
+    def bottom_k(prev, batch):
+        cand = batch.select("event_type", h.alias("h")).distinct()
+        if prev is not None:
+            cand = prev.unionByName(cand).distinct()
+        return (
+            cand.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") <= _K)
+            .drop("rn")
         )
-        w = W.partitionBy("event_type").orderBy("h")
 
-        def merge(batch, batch_id):
-            cand = batch.select("event_type", h.alias("h")).distinct()
-            if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-                prev = batch.sparkSession.read.parquet(state_dir)
-                cand = prev.unionByName(cand).distinct()
-            nxt = (
-                cand.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") <= _K)
-                .drop("rn")
-            )
-            staging = state_dir + f"._stage_{batch_id}"
-            nxt.coalesce(1).write.mode("overwrite").parquet(staging)
-            if os.path.exists(state_dir):
-                shutil.rmtree(state_dir)
-            os.rename(staging, state_dir)
-
-        reader = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stream_dir)
-        )
-        with stream_conf(spark):
-            q = (
-                reader.writeStream.foreachBatch(merge)
-                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        sk = spark.read.parquet(state_dir)
+    # chunk membership is deliberately arbitrary (content hash) — the
+    # sketch's mergeability makes the result chunk-invariant
+    with fold_replay(spark, events, bottom_k) as sk:
         est = F.when(
             F.count(F.lit(1)) < _K, F.count(F.lit(1)).cast("double")
         ).otherwise(
@@ -1632,8 +1384,6 @@ def stream_kmv_distinct(spark, sf_dir):
             est.alias("kmv_est"),
         )
         return snapshot_small(out)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -1744,80 +1494,6 @@ def stream_asof_join(spark, sf_dir):
     ).filter(F.col("purchase_id") >= 0)
 
 
-def _fold_replay(spark, source, fold, n_chunks=3):
-    """Replay ``source`` as ``n_chunks`` content-hash chunks through a
-    checkpointed foreachBatch query, folding each micro-batch into
-    parquet-persisted state via ``fold(prev_state_or_None, batch_df) ->
-    next_state``, and return the FINAL state materialized as a normal
-    DataFrame. The fold must be mergeable (fold of unions == fold of
-    folds) and idempotent under batch redelivery — the contracts
-    `_reservoir_fold` and `_topk_measure_fold` pin in tests. Chunk
-    membership is deliberately arbitrary (content hash): mergeability
-    makes the result chunk-invariant, which is what the shared oracle
-    checks. State stays O(k x groups) rows at any stream rate.
-
-    Set-semantics folds (bottom-k / top-k) are idempotent through
-    full-row dedup alone; COUNT-semantics folds (histograms) cannot
-    be — they declare a third ``batch_id`` parameter and the harness
-    passes it through so the fold can skip re-applied batches (the
-    standard foreachBatch idempotent-write pattern)."""
-    import inspect
-    import os
-    import shutil
-    import tempfile
-
-    wants_batch_id = "batch_id" in inspect.signature(fold).parameters
-    tmp = tempfile.mkdtemp(prefix="fb_fold_")
-    try:
-        stream_dir = os.path.join(tmp, "stream")
-        state_dir = os.path.join(tmp, "state")
-        chunked = source.withColumn(
-            "_chunk",
-            F.pmod(
-                F.xxhash64(F.struct(*[F.col(c) for c in source.columns])),
-                F.lit(n_chunks),
-            ).cast("int"),
-        ).cache()
-        for i in range(n_chunks):
-            chunked.filter(F.col("_chunk") == i).drop("_chunk").coalesce(
-                1
-            ).write.mode("append").parquet(stream_dir)
-        chunked.unpersist()
-
-        def merge(batch, batch_id):
-            prev = None
-            if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-                prev = batch.sparkSession.read.parquet(state_dir)
-            if wants_batch_id:
-                nxt = fold(prev, batch, batch_id=batch_id)
-            else:
-                nxt = fold(prev, batch)
-            staging = state_dir + f"._stage_{batch_id}"
-            nxt.coalesce(1).write.mode("overwrite").parquet(staging)
-            if os.path.exists(state_dir):
-                shutil.rmtree(state_dir)
-            os.rename(staging, state_dir)
-
-        reader = (
-            spark.readStream.schema(source.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stream_dir)
-        )
-        with stream_conf(spark):
-            q = (
-                reader.writeStream.foreachBatch(merge)
-                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        return snapshot_small(spark.read.parquet(state_dir))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 def _reservoir_fold(state, batch, k=4):
     """One fold of the bottom-k ROW reservoir: bottom-k per event_type
     of (state UNION batch) on (h, event_id). The full-row dedup makes
@@ -1906,7 +1582,8 @@ def stream_reservoir_sample(spark, sf_dir):
     events = t(spark, sf_dir, "events").select(
         "event_type", "event_id", "user_id", h.alias("h")
     )
-    state = _fold_replay(spark, events, _reservoir_fold)
+    with fold_replay(spark, events, _reservoir_fold) as state:
+        state = snapshot_small(state)
     w = W.partitionBy("event_type").orderBy("h", "event_id")
     return state.select(
         "event_type",
@@ -2000,7 +1677,8 @@ def stream_histogram_quantile(spark, sf_dir):
         .cast("long")
         .alias("bin"),
     )
-    state = _fold_replay(spark, events, _histogram_fold)
+    with fold_replay(spark, events, _histogram_fold) as state:
+        state = snapshot_small(state)
     w_cum = (
         W.partitionBy("event_type")
         .orderBy("bin")
@@ -2066,7 +1744,8 @@ def stream_topk_per_group(spark, sf_dir):
     events = t(spark, sf_dir, "events").select(
         "event_type", "event_id", "user_id", "value"
     )
-    state = _fold_replay(spark, events, _topk_measure_fold)
+    with fold_replay(spark, events, _topk_measure_fold) as state:
+        state = snapshot_small(state)
     w = W.partitionBy("event_type").orderBy(F.desc("value"), "event_id")
     return state.select(
         "event_type",

@@ -448,3 +448,30 @@ def test_no_raw_collect_snapshot_sites():
     assert not offenders, (
         f"raw collect-snapshot outside _snapshot.py: {offenders}"
     )
+
+
+def test_stream_drains_only_in_replay_path():
+    """Every scratch-dir streaming key chunks, drains and folds through
+    `streaming/replay.py`; only it and the Singer streaming job
+    (`streaming/singer_stream.py`, which paces its own log files) may
+    call ``processAllAvailable(`` or set ``maxFilesPerTrigger`` — a
+    key that does either has grown its own copy of the replay
+    scaffold, without the mtime ladder or the replay timings."""
+    import os
+    import re
+
+    pkg = os.path.join(os.path.dirname(__file__), "..", "target_s3_parquet_spark")
+    allowed = {
+        os.path.join("streaming", "replay.py"),
+        os.path.join("streaming", "singer_stream.py"),
+    }
+    pat = re.compile(r"processAllAvailable\(|\.option\(\s*\"maxFilesPerTrigger\"")
+    offenders = []
+    for root, _, files in os.walk(pkg):
+        for fn in files:
+            path = os.path.join(root, fn)
+            rel = os.path.relpath(path, pkg)
+            if fn.endswith(".py") and rel not in allowed:
+                if pat.search(open(path).read()):
+                    offenders.append(rel)
+    assert not offenders, f"stream drain outside streaming/replay.py: {offenders}"
