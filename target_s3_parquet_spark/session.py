@@ -135,6 +135,15 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffledHashJoinFactor", "3")
+        # Generated-class cache (an LRU keyed by source). Its default of
+        # 100 entries is smaller than cycles we repeat: a perfbench
+        # `query` pass has 144 distinct classes, ingest 64, the bench.py
+        # headline's 24 keys 207. An LRU shorter than the cycle hits
+        # nothing, so every warm `query` pass recompiled ~126 classes
+        # with Janino and handed the JIT brand-new classes. Static conf:
+        # CodeGenerator$ reads it once, at the JVM's first codegen, so
+        # only the builder of the JVM's first session can set it.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # Read TIMESTAMP(NANOS) parquet columns as raw long nanos instead
         # of failing (Spark timestamps are µs); load_table truncates.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -105,13 +105,18 @@ def write_chunks(
     from target_s3_parquet_spark.operators._util import two_phase_rank
 
     if order is not None:
-        total = source.count()
-        n_eff = max(1, min(n_chunks, total))
-        chunk = ((F.col("rnk") - 1) * n_eff / total).cast("int")
-        numbered = two_phase_rank(source, order).withColumn("_chunk", chunk)
-        numbered = numbered.drop("rnk")
+        ranked = two_phase_rank(source, order)
+        # The row count is a broadcast scalar over the ranked frame's
+        # cache, inside the write job: the source is scanned once.
+        total = ranked.agg(F.count(F.lit(1)).alias("_total"))
+        n_eff = F.least(F.lit(n_chunks), F.col("_total"))
+        chunk = ((F.col("rnk") - 1) * n_eff / F.col("_total")).cast("int")
+        numbered = (
+            ranked.crossJoin(F.broadcast(total))
+            .withColumn("_chunk", chunk)
+            .drop("rnk", "_total")
+        )
     else:
-        n_eff = n_chunks
         row_hash = F.xxhash64(F.struct(*[F.col(c) for c in source.columns]))
         numbered = source.withColumn(
             "_chunk", F.pmod(row_hash, F.lit(n_chunks)).cast("int")
@@ -123,7 +128,9 @@ def write_chunks(
     numbered.coalesce(1).write.partitionBy("_chunk").parquet(
         os.path.join(staging, "chunks")
     )
-    dirs = [os.path.join(staging, "chunks", f"_chunk={i}") for i in range(n_eff)]
+    dirs = [
+        os.path.join(staging, "chunks", f"_chunk={i}") for i in range(n_chunks)
+    ]
     for j, extra in enumerate(tail_chunks):
         dirs.append(os.path.join(staging, f"tail_{j}"))
         extra.coalesce(1).write.parquet(dirs[-1])
@@ -136,7 +143,7 @@ def write_chunks(
     os.makedirs(stream_dir)
     base = time.time()
     for step, d in enumerate(dirs):
-        if not os.path.isdir(d):  # an empty hash chunk
+        if not os.path.isdir(d):  # an empty chunk
             continue
         for f in os.listdir(d):
             if f.endswith(".parquet"):

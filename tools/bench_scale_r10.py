@@ -1,4 +1,4 @@
-"""Scale-up evidence for the r10/r11/r12 key families (VERDICT r10
+"""Scale-up evidence for the r10–r13 key families (VERDICT r10
 item 7, r11 item 6, r12 item 9): run the ACTUAL registered keys at 1×
 and 10×.
 
@@ -12,10 +12,10 @@ key functions on it. That validates the cached-edge-list,
 ordered-fold, and bounded-collect claims off-SF on the same code path
 the gate checks.
 
-    python tools/bench_scale_r10.py [sf_dir] [factor] [r10|r11|r12|all]
+    python tools/bench_scale_r10.py [sf_dir] [factor] [r10|r11|r12|r13|all]
 
 `run_scaled_keys(spark, sf_dir, which, factor)` is the one runner; the
-CLI and bench.py (the `scale10_r10/r11/r12` extras) both call it.
+CLI and bench.py (the `scale10_r10` … `scale10_r13` extras) both call it.
 """
 
 from __future__ import annotations
@@ -68,6 +68,14 @@ KEYS = {
         "eval_conformal_interval",
         "vocab_good_turing_counts",
         "eval_isotonic_calibration",
+    ],
+    # r13 keys: the bucketed merge-count rank statistics (10× lineitem
+    # grows the quantity/price pairs) and IVF-PQ search (10× embeddings
+    # grows the coded corpus)
+    "r13": [
+        "agg_corr_kendall_tau",
+        "agg_corr_concordance_stats",
+        "sim_ann_ivfpq_search",
     ],
 }
 
@@ -159,7 +167,7 @@ def _materialize_scaled(spark, sf_dir: str, factor: int) -> str:
 
 
 def run_scaled_keys(spark, sf_dir: str, which: str, factor: int = 10) -> dict:
-    """Time each key of round `which` (`r10`/`r11`/`r12`, or `all` of
+    """Time each key of round `which` (a `KEYS` tag, or `all` of
     them) once at 1× and once at `factor`× and record the ratio."""
     from target_s3_parquet_spark.operators._util import release_rank_caches
     from target_s3_parquet_spark.registry import get_queries
