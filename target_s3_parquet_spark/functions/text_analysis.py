@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from target_s3_parquet_spark._snapshot import session_memo, snapshot_persisted
 from target_s3_parquet_spark.operators._util import (
     fan_out_scan,
+    min_label_components,
     ntile_from_rank,
     t,
     two_phase_rank,
@@ -1912,13 +1913,11 @@ def er_cluster_canonicalize(spark, sf_dir):
     data pipeline ships (deterministic; swap in quality-based election
     by replacing the MIN with a min_by on a quality struct).
 
-    Spark side reuses the iterative min-label propagation from
-    `text_dedup_clusters` (one shuffle-join per round, lineage
-    truncated by localCheckpoint; ER clusters are shallow, and the
-    loop exits as soon as a round changes ZERO labels — convergence
-    is checked, not assumed, with a cheap count over the round's
-    already-checkpointed labels) over the SAME multipass
-    candidate edges the pairwise key verifies. Output keeps only
+    Spark side is the min-label propagation `text_dedup_clusters`
+    runs (`_util.min_label_components`: one shuffle-join per round,
+    lineage truncated by localCheckpoint, run until a round lowers no
+    label; ER clusters are shallow) over the SAME multipass candidate
+    edges the pairwise key verifies. Output keeps only
     multi-record clusters (the actual merge work list). The DuckDB
     oracle states the fixpoint as a recursive transitive closure, so
     the iterative program is value-verified, not rows-only.
@@ -1928,60 +1927,17 @@ def er_cluster_canonicalize(spark, sf_dir):
     edge list, convergence in diameter rounds, and the match graph is
     already blocked/banded upstream so edges ~ O(true matches), not
     O(n^2). Reference scope: extension surface (SURVEY.md §2C)."""
-    pairs = _er_multipass(spark, sf_dir).select("key_a", "key_b")
-    edges = pairs.select(
+    edges = _er_multipass(spark, sf_dir).select(
         F.col("key_a").alias("src"), F.col("key_b").alias("dst")
-    ).unionAll(
-        pairs.select(F.col("key_b").alias("src"), F.col("key_a").alias("dst"))
-    ).localCheckpoint()
+    )
     nodes = (
         t(spark, sf_dir, "customer")
         .filter(F.col("c_custkey") < 3000)
-        .select(F.col("c_custkey").alias("k"))
+        .select(F.col("c_custkey").alias("node"))
     )
-    labels = nodes.select("k", F.col("k").alias("cluster_id"))
-    # Convergence-checked propagation: each round's labels are already
-    # materialized by localCheckpoint, so the changed-count action
-    # reads the checkpoint — one cheap count per round buys early exit
-    # at the true diameter (3-5 rounds on the fixture) instead of a
-    # fixed worst-case round budget, and proves the fixpoint was
-    # reached rather than assuming it.
-    for _ in range(20):
-        neighbor_min = (
-            edges.join(labels, edges.src == labels.k)
-            .groupBy(F.col("dst").alias("k"))
-            .agg(F.min("cluster_id").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, "k", "left")
-            .select(
-                "k",
-                F.least(
-                    F.col("cluster_id"),
-                    F.coalesce(F.col("nmin"), F.col("cluster_id")),
-                ).alias("cluster_id"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "k")
-            .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        # A silent exit here would return WRONG cluster labels (only the
-        # external oracle would notice) and er_survivorship_golden_record
-        # consumes them — non-convergence must be an explicit failure.
-        raise RuntimeError(
-            "er_cluster_canonicalize: min-label propagation did not "
-            "converge within 20 rounds — match-graph diameter exceeds "
-            "the round budget; raise the budget rather than emitting "
-            "unconverged cluster labels"
-        )
+    labels = min_label_components(edges, nodes).select(
+        F.col("node").alias("k"), F.col("label").alias("cluster_id")
+    )
     sz = labels.groupBy("cluster_id").agg(
         F.count("*").alias("cluster_size")
     )

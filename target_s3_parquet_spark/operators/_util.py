@@ -49,15 +49,16 @@ def sql_davg(expr: str, alias: str) -> str:
     )
 
 
-# Live cache handles created by two_phase_rank, released in bulk by
-# release_rank_caches() AFTER the caller materializes (collect,
-# snapshot, parquet write). Unpersisting earlier is a correctness
-# hazard — see the docstring below.
+# Live cache handles created by register_cache (two_phase_rank and
+# operator-internal caches), released in bulk by release_rank_caches()
+# AFTER the caller materializes (collect, snapshot, parquet write).
+# Unpersisting a rank cache earlier is a correctness hazard — see
+# two_phase_rank. Nothing else in the package names the list.
 _RANK_CACHES: list[DataFrame] = []
 
 
 def release_rank_caches() -> int:
-    """Unpersist every cache two_phase_rank has created since the last
+    """Unpersist every cache register_cache has created since the last
     release and drop the Python handles. Safe ONLY after the results
     built on them are materialized (the lazy plans would otherwise
     resample range bounds on re-execution). Returns the number of
@@ -104,12 +105,12 @@ def fan_out_scan(df: DataFrame) -> DataFrame:
 
 def register_cache(df: DataFrame) -> DataFrame:
     """``df.cache()`` with the handle registered in ``_RANK_CACHES`` so
-    :func:`release_rank_caches` drops it alongside the rank caches.
-    For operator-internal caches (graph edge lists, survival curves,
-    ...) whose release must wait until the caller materializes — a
+    :func:`release_rank_caches` drops it. The one way an operator
+    caches: rank caches, graph edge lists, survival curves, ... —
+    anything whose release must wait until the caller materializes (a
     long-lived session that runs many keys outside the gate/bench
     harnesses would otherwise accumulate cached DataFrames unless it
-    remembered to ``spark.catalog.clearCache()`` itself."""
+    remembered to ``spark.catalog.clearCache()`` itself)."""
     local = df.cache()
     _RANK_CACHES.append(local)
     return local
@@ -125,9 +126,9 @@ def two_phase_rank(
 ) -> DataFrame:
     """Global ROW_NUMBER (and optionally a running SUM) in total
     ``order_cols`` order WITHOUT a single-partition window — the
-    distributed prefix-sum shape shared with ``assign_dense_ids``
-    (`operators/pipeline.py`), generalized to multi-column orderings
-    (ascending or descending) and an optional accumulated measure:
+    package's one distributed prefix scan (dense ids are ``rnk - 1``),
+    over multi-column orderings (ascending or descending) and an
+    optional accumulated measure:
 
     1. ``repartitionByRange`` on the order columns — partition p holds
        rows strictly below partition p+1 in the total order (boundary
@@ -151,8 +152,9 @@ def two_phase_rank(
     references it, and dropping it BEFORE materialization would let
     the two plan references resample different range bounds — a
     correctness event, not a perf one); instead every cache handle is
-    registered in ``_RANK_CACHES`` and callers release them AFTER
-    materializing/snapshotting via :func:`release_rank_caches` — the
+    registered through :func:`register_cache` and callers release
+    them AFTER materializing/snapshotting via
+    :func:`release_rank_caches` — the
     gate, bench, and test harnesses do so per key (alongside their
     ``spark.catalog.clearCache()``), so repeated invocations keep
     storage memory flat.
@@ -171,8 +173,7 @@ def two_phase_rank(
                 w_local.rowsBetween(Window.unboundedPreceding, 0)
             ),
         )
-    local = local.cache()
-    _RANK_CACHES.append(local)
+    local = register_cache(local)
     aggs = [F.count(F.lit(1)).alias("_n")]
     if sum_col is not None:
         aggs.append(F.sum(sum_col).alias("_s"))
@@ -235,3 +236,45 @@ def ntile_from_rank(rank: Column, n: Column, k: int) -> Column:
         )
         .cast("int")
     )
+
+
+def min_label_components(edges: DataFrame, nodes: DataFrame) -> DataFrame:
+    """Connected components by min-label propagation: ``(node, label)``
+    for every row of ``nodes`` (one column, ``node``), ``label`` being
+    the smallest node reachable from it over ``edges`` (``src``,
+    ``dst``), read as undirected. Edge endpoints outside ``nodes`` are
+    ignored.
+
+    Each round every node takes the min of its own label and its
+    neighbours' — one shuffle-join of the label table against the edge
+    list plus one aggregate — and ``localCheckpoint`` truncates the
+    lineage. The loop runs until a round lowers no label, and it always
+    ends: labels only decrease and every round before the last lowers
+    at least one, so it takes at most diameter + 1 rounds. (A round cap
+    could only cut a right answer short.) The driver sees one
+    emptiness probe per round over the already-checkpointed labels;
+    labels and edges stay distributed. At billion-node scale the
+    large-star/small-star contraction of Kiveris et al. is the
+    poly-log-rounds alternative."""
+    und = edges.select("src", "dst").unionAll(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).localCheckpoint()
+    labels = nodes.select("node", F.col("node").alias("label"))
+    while True:
+        nmin = (
+            und.join(labels.withColumnRenamed("node", "src"), "src")
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.min("label").alias("_nmin"))
+        )
+        step = (
+            labels.join(nmin, "node", "left")
+            .select(
+                "node",
+                F.least("label", F.coalesce("_nmin", "label")).alias("label"),
+                (F.col("_nmin") < F.col("label")).alias("_lowered"),
+            )
+            .localCheckpoint()
+        )
+        labels = step.drop("_lowered")
+        if step.filter("_lowered").isEmpty():
+            return labels

@@ -22,6 +22,7 @@ from target_s3_parquet_spark._snapshot import (
 )
 from target_s3_parquet_spark.operators._util import (
     fan_out_scan,
+    min_label_components,
     register_cache,
     t,
 )
@@ -534,17 +535,12 @@ def text_dedup_clusters(spark, sf_dir):
     A!~C) in separate decisions; clustering resolves the whole group at
     once — the keep-one-per-cluster policy a corpus dedup actually ships.
 
-    Spark side is iterative min-label propagation (the standard
-    large-graph CC algorithm — GraphX/Pregel's small-star step): each
-    round every node takes the min label among itself and its
-    neighbors; converges in graph-diameter rounds (near-dup clusters
-    are shallow — diameter 2-3). Each round is one shuffle-join of the
-    label table against the edge list; `localCheckpoint` truncates the
-    growing lineage. The driver-side loop is bounded control flow, not
-    data flow — per-round data movement stays fully distributed. The
-    DuckDB oracle computes the same fixpoint as a recursive CTE
-    (transitive closure + MIN), so the iterative algorithm is
-    value-verified, not rows-only."""
+    Spark side is iterative min-label propagation to the fixpoint
+    (`_util.min_label_components`, the standard large-graph CC
+    algorithm — GraphX/Pregel's small-star step); near-dup clusters
+    are shallow, diameter 2-3. The DuckDB oracle computes the same
+    fixpoint as a recursive CTE (transitive closure + MIN), so the
+    iterative algorithm is value-verified, not rows-only."""
     d = t(spark, sf_dir, "documents").filter(F.col("doc_id") < 64)
     words = F.split(F.lower(F.col("text")), " ")
     grams = F.when(
@@ -567,37 +563,10 @@ def text_dedup_clusters(spark, sf_dir):
         .filter(inter.cast("double") / uni >= 0.2)
         .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
     )
-    edges = pairs.unionAll(
-        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
-
-    labels = sets.select("doc_id", F.col("doc_id").alias("cluster_id"))
-    for _ in range(20):
-        neighbor_min = (
-            edges.join(labels, edges.src == labels.doc_id)
-            .groupBy(F.col("dst").alias("doc_id"))
-            .agg(F.min("cluster_id").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(F.col("cluster_id"), F.coalesce(F.col("nmin"), F.col("cluster_id"))).alias(
-                    "cluster_id"
-                ),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
+    labels = min_label_components(pairs, d.select(F.col("doc_id").alias("node")))
+    return labels.select(
+        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
+    )
 
 
 @query(

@@ -17,6 +17,7 @@ from target_s3_parquet_spark.operators._util import (
     fan_out_scan,
     dec,
     ntile_from_rank,
+    register_cache,
     t,
     two_phase_rank,
 )
@@ -1539,67 +1540,13 @@ def ids_dense_assign(spark, sf_dir):
        into starting offsets and BROADCAST back;
     4. dense_id = offset[pid] + local_rn - 1.
 
-    The only global coordination is the tiny offset table — the
-    DataFrame twin of RDD zipWithIndex. The oracle states the
-    semantics as the naive global window."""
-    return assign_dense_ids(
-        t(spark, sf_dir, "documents").select("doc_id"), "doc_id"
-    ).select("doc_id", "dense_id")
-
-
-def assign_dense_ids(df, key_col: str, nparts: int = 8):
-    """Add ``dense_id`` = 0..n-1 in total ``key_col`` order (keys must
-    be distinct) — the distributed zipWithIndex described in
-    `ids_dense_assign`. The result is a pure function of the key set:
-    partition count and input partitioning only affect balance.
-    The offsets window orders a NUM-PARTITIONS-row aggregate (bounded
-    by construction), not the data.
-
-    ``local`` is CACHED before fanning out to the offsets aggregate and
-    the final join: repartitionByRange samples its bounds (seeded per
-    RDD id), so two independent materializations of the subtree could
-    pick DIFFERENT ranges — offset[pid] would then disagree with the
-    pids under local_rn and ids would silently collide. Exchange reuse
-    usually dedups the two scans, but correctness must not hinge on a
-    plan-canonicalization optimization."""
-    local = (
-        df.repartitionByRange(nparts, key_col)
-        .withColumn("pid", F.spark_partition_id())
-        .withColumn(
-            "local_rn",
-            F.row_number().over(
-                W.partitionBy("pid").orderBy(key_col)
-            ),
-        )
-        .cache()
-    )
-    offsets = (
-        local.groupBy("pid")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn(
-            "offset",
-            # partitionBy(pmod(pid, 1)) = one bounded group (<= nparts
-            # rows), declared deliberately — same execution as
-            # unpartitioned, exempt from the WindowExec data-sized-sort
-            # warning (lit(0) would be constant-folded away)
-            F.coalesce(
-                F.sum("n").over(
-                    W.partitionBy(F.pmod(F.col("pid"), F.lit(1)))
-                    .orderBy("pid")
-                    .rowsBetween(W.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("pid", "offset")
-    )
-    return (
-        local.join(F.broadcast(offsets), "pid")
-        .withColumn(
-            "dense_id", F.col("offset") + F.col("local_rn") - 1
-        )
-        .drop("pid", "local_rn", "offset")
-    )
+    That is `two_phase_rank`'s rank minus one. The only global
+    coordination is the tiny offset table — the DataFrame twin of RDD
+    zipWithIndex. The oracle states the semantics as the naive global
+    window."""
+    docs = t(spark, sf_dir, "documents").select("doc_id")
+    ranked = two_phase_rank(docs, ["doc_id"])
+    return ranked.select("doc_id", (F.col("rnk") - 1).alias("dense_id"))
 
 
 @query(
@@ -1925,9 +1872,9 @@ def sample_weighted_systematic(spark, sf_dir):
     deterministic: everything is BIGINT arithmetic on md5-permuted
     order, so engines and re-runs agree bit-for-bit.
 
-    The prefix sum is the two-phase distributed form shared with
-    `ids_dense_assign` (`assign_dense_ids`): range-shuffle on the hash
-    order key, partition-local window cumsum, then a num-partitions-row
+    The prefix sum is `two_phase_rank`'s running sum, the form
+    `ids_dense_assign` ranks with: range-shuffle on the hash order
+    key, partition-local window cumsum, then a num-partitions-row
     offsets table cumsum'd and broadcast back — the only global
     coordination is that tiny table, never a single-partition window.
     Partition boundaries affect balance only: cum is a pure function
@@ -1945,38 +1892,8 @@ def sample_weighted_systematic(spark, sf_dir):
         F.col("n_chars").alias("w"),
         F.md5(F.col("doc_id").cast("string")).alias("h"),
     )
-    local = (
-        d.repartitionByRange(8, "h", "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .withColumn(
-            "local_cum",
-            F.sum("w").over(W.partitionBy("pid").orderBy("h", "doc_id")),
-        )
-        .cache()
-    )
-    offsets = (
-        local.groupBy("pid")
-        .agg(F.sum("w").alias("pw"))
-        .withColumn(
-            "offset",
-            # one bounded group over <= nparts rows (see
-            # assign_dense_ids for why pmod(pid, 1), not lit(0))
-            F.coalesce(
-                F.sum("pw").over(
-                    W.partitionBy(F.pmod(F.col("pid"), F.lit(1)))
-                    .orderBy("pid")
-                    .rowsBetween(W.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("pid", "offset")
-    )
+    cum = two_phase_rank(d, ["h", "doc_id"], sum_col="w")
     tot = d.agg((F.floor(F.sum("w") / 64)).cast("long").alias("s"))
-    cum = (
-        local.join(F.broadcast(offsets), "pid")
-        .withColumn("cum", F.col("offset") + F.col("local_cum"))
-    )
     hits = F.expr("cum div s") - F.expr("(cum - w) div s")
     return (
         cum.crossJoin(F.broadcast(tot))
@@ -2073,10 +1990,10 @@ def corpus_gini_concentration(spark, sf_dir):
     so the rank — and therefore the numerator — is unique and
     deterministic); ONE final IEEE division produces the double.
 
-    The global rank uses `assign_dense_ids`' two-phase prefix-sum form
-    (range shuffle on a zero-padded (cnt, token) sort key + local
-    row_number + broadcast offsets), NEVER the single-partition
-    ROW_NUMBER window the oracle uses to state the semantics —
+    The global rank is `two_phase_rank`'s two-phase prefix scan
+    (range shuffle on (cnt, token) + local row_number + broadcast
+    offsets), NEVER the single-partition ROW_NUMBER window the oracle
+    uses to state the semantics —
     vocabulary at 100 TB is tens of millions of rows, sublinear in
     corpus size but far beyond one task. Reference scope: extension
     surface (SURVEY.md §2C pipeline row)."""
@@ -2090,15 +2007,7 @@ def corpus_gini_concentration(spark, sf_dir):
         .filter(F.col("token") != "")
     )
     c = toks.groupBy("token").agg(F.count("*").alias("cnt"))
-    keyed = c.withColumn(
-        "sortkey",
-        F.concat_ws(
-            ":", F.lpad(F.col("cnt").cast("string"), 12, "0"), "token"
-        ),
-    )
-    ranked = assign_dense_ids(keyed, "sortkey").withColumn(
-        "rnk", F.col("dense_id") + 1
-    )
+    ranked = two_phase_rank(c, ["cnt", "token"])
     s = ranked.agg(
         F.count("*").alias("vocab"),
         F.sum("cnt").alias("n_tokens"),
@@ -2145,8 +2054,7 @@ def corpus_gini_concentration(spark, sf_dir):
     ),
     ranked AS (
       SELECT doc_id, lm_score_scaled,
-             row_number() OVER (
-               ORDER BY lm_score_scaled * 16777216 + doc_id) AS rn,
+             row_number() OVER (ORDER BY lm_score_scaled, doc_id) AS rn,
              COUNT(*) OVER () AS n
       FROM scored
     )
@@ -2167,32 +2075,25 @@ def corpus_ccnet_quality_buckets(spark, sf_dir):
 
     Determinism: the mean likelihood is truncated onto the 1e-9
     integer grid (`FLOOR(mean * 1e9)` — the tie-free device the
-    k-means keys use), the rank key folds doc_id into the low bits so
-    ordering is total, and the tercile is exact integer arithmetic
-    ((rank-1)*3 DIV n). The global rank runs through
-    `assign_dense_ids`' two-phase prefix sum — NEVER the oracle's
-    single-partition window — so the plan scales: scoring is the LM
-    key's exchange shape, ranking adds one range shuffle on the
-    numeric sort key plus a broadcast offsets table. At 100 TB this IS
-    the corpus-curation pass: score, rank, keep-by-bucket."""
+    k-means keys use), doc_id breaks score ties so ordering is total,
+    and the tercile is exact integer arithmetic ((rank-1)*3 DIV n).
+    The global rank runs through `two_phase_rank`'s two-phase prefix
+    scan — NEVER the oracle's single-partition window — so the plan
+    scales: scoring is the LM key's exchange shape, ranking adds one
+    range shuffle on (score, doc_id) plus a broadcast offsets table.
+    At 100 TB this IS the corpus-curation pass: score, rank,
+    keep-by-bucket."""
     from target_s3_parquet_spark.operators.extensions import (
         text_bigram_lm_score,
     )
 
-    scored = (
-        text_bigram_lm_score(spark, sf_dir)
-        .select(
-            "doc_id",
-            F.floor(
-                F.col("sum_p") / F.col("n_bigrams") * 1000000000.0
-            ).cast("long").alias("lm_score_scaled"),
-        )
-        .withColumn(
-            "rank_key",
-            F.col("lm_score_scaled") * 16777216 + F.col("doc_id"),
-        )
+    scored = text_bigram_lm_score(spark, sf_dir).select(
+        "doc_id",
+        F.floor(
+            F.col("sum_p") / F.col("n_bigrams") * 1000000000.0
+        ).cast("long").alias("lm_score_scaled"),
     )
-    ranked = assign_dense_ids(scored, "rank_key")
+    ranked = two_phase_rank(scored, ["lm_score_scaled", "doc_id"])
     n = ranked.agg(F.count("*").alias("n"))
     return (
         ranked.crossJoin(F.broadcast(n))
@@ -2200,7 +2101,7 @@ def corpus_ccnet_quality_buckets(spark, sf_dir):
             "doc_id",
             "lm_score_scaled",
             F.expr(
-                "CASE dense_id * 3 div n WHEN 0 THEN 'tail' "
+                "CASE (rnk - 1) * 3 div n WHEN 0 THEN 'tail' "
                 "WHEN 1 THEN 'middle' ELSE 'head' END"
             ).alias("bucket"),
         )
@@ -3602,10 +3503,7 @@ def pareto_frontier_skyline(spark, sf_dir):
         .rowsBetween(W.unboundedPreceding, -1)
     )
     local = local.withColumn("_loc_strict", F.max("maxc").over(w_loc))
-    local = local.cache()
-    from target_s3_parquet_spark.operators._util import _RANK_CACHES
-
-    _RANK_CACHES.append(local)
+    local = register_cache(local)
     w_off = (
         W.partitionBy(F.pmod(F.col("_pid"), F.lit(1)))
         .orderBy("_pid")

@@ -312,8 +312,8 @@ def window_ntile_prod(spark, sf_dir):
     """The 100 TB form of `window_ntile`, bit-identical output: the
     global sort-into-ONE-task that `ntile(10) OVER (ORDER BY ...)`
     costs is replaced by `two_phase_rank`'s range-shuffle + local
-    row_number + broadcast offsets (the `assign_dense_ids` prefix-sum
-    pattern), then the closed-form NTILE from (rank, n) — the first
+    row_number + broadcast offsets (the package's one prefix scan),
+    then the closed-form NTILE from (rank, n) — the first
     n mod 10 buckets take one extra row, exactly the window function's
     contract. Every stage is data-parallel: the only unpartitioned
     window in the plan orders the NUM-PARTITIONS offsets table. The

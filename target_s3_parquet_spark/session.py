@@ -101,6 +101,18 @@ def runtime_conf_from_config(config: dict) -> dict[str, str]:
     return conf
 
 
+def _default_driver_memory() -> str:
+    """Half of the host's physical memory (MemTotal), at most 16g. In
+    local mode the driver JVM is the whole engine, and a heap larger
+    than the host lets the kernel OOM killer end the run instead of
+    Spark spilling."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "16g"
+    return f"{max(1024, min(16384, total // 2**21))}m"
+
+
 def get_spark(
     app_name: str = "target_s3_parquet_spark",
     master: str | None = None,
@@ -112,7 +124,8 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default
     ``local[*]``). ``shuffle_partitions`` defaults to the local core
     count — on a cluster you'd size it to ~2-3× total executor cores
-    and let AQE coalesce.
+    and let AQE coalesce. The driver heap is ``$SPARK_DRIVER_MEMORY``,
+    else half of host memory, at most 16g.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -132,7 +145,10 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffledHashJoinFactor", "3")
         # Generated-class cache (an LRU keyed by source). Its default of

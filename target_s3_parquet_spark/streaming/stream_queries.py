@@ -931,10 +931,8 @@ def stream_python_datasource(spark, sf_dir):
             .option("checkpointLocation", os.path.join(tmp, "ckpt"))
         )
         drain(spark, writer.start)
-        return (
-            spark.table(name)
-            .select("status", "n_orders", "total_price")
-            .localCheckpoint()
+        return snapshot_small(
+            spark.table(name).select("status", "n_orders", "total_price")
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

@@ -269,16 +269,17 @@ def test_preference_pairs_have_nonnegative_margin(spark):
 )
 @settings(max_examples=12, deadline=None)
 def test_dense_id_assignment_is_partitioning_invariant(spark, keys, nparts):
-    # dense ids must be a pure function of the KEY SET — any partition
-    # count and any input distribution yields rank-in-sorted-order
-    from target_s3_parquet_spark.operators.pipeline import assign_dense_ids
+    # dense ids (two_phase_rank's rank - 1) must be a pure function of
+    # the KEY SET — any partition count and any input distribution
+    # yields rank-in-sorted-order
+    from target_s3_parquet_spark.operators._util import two_phase_rank
 
     df = spark.createDataFrame(
         [(k,) for k in keys], "k long"
     ).repartition((nparts % 3) + 1)
     got = {
-        r["k"]: r["dense_id"]
-        for r in assign_dense_ids(df, "k", nparts=nparts).collect()
+        r["k"]: r["rnk"] - 1
+        for r in two_phase_rank(df, ["k"], nparts=nparts).collect()
     }
     want = {k: i for i, k in enumerate(sorted(keys))}
     assert got == want

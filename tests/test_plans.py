@@ -371,11 +371,11 @@ _BNLJ_BOUNDED_OK = {
 # Keys where an unpartitioned ORDER BY window is LEGITIMATE — i.e. the
 # key IS the exact single-sort reference form kept as the oracle twin
 # of a registered scale-safe variant, or the window input is bounded by
-# declared contract. (The two_phase_rank / assign_dense_ids offsets
-# windows do NOT appear here: they partition on pmod(pid, 1) — one
-# bounded group over <= nparts rows — precisely so this flag marks only
-# data-sized single-task sorts.) Anything else sprouting a global
-# window is a scale regression.
+# declared contract. (The two_phase_rank offsets windows do NOT
+# appear here: they partition on pmod(pid, 1) — one bounded group over
+# <= nparts rows — precisely so this flag marks only data-sized
+# single-task sorts.) Anything else sprouting a global window is a
+# scale regression.
 _GLOBAL_WINDOW_OK = {
     # exact references of registered _prod twins (LSH demo/prod
     # precedent):
@@ -431,20 +431,28 @@ def test_no_raw_collect_snapshot_sites():
     the guarded helpers in `_snapshot.py` (row-capped driver round-trip
     or executor-side persisted copy) — a raw
     ``createDataFrame(x.collect(), ...)`` hides an unbounded driver
-    materialization and is rejected outside the helper module."""
+    materialization and is rejected outside the helper module, and so
+    is a ``.localCheckpoint()`` under `streaming/` or `sources/`, which
+    holds the result in executor memory with no row cap."""
     import os
     import re
 
     pkg = os.path.join(os.path.dirname(__file__), "..", "target_s3_parquet_spark")
     pat = re.compile(r"createDataFrame\(\s*\w+\.collect\(\)")
+    checkpoint = re.compile(r"\.localCheckpoint\(")
     offenders = []
     for root, _, files in os.walk(pkg):
         for fn in files:
             if not fn.endswith(".py") or fn == "_snapshot.py":
                 continue
             path = os.path.join(root, fn)
-            if pat.search(open(path).read()):
-                offenders.append(os.path.relpath(path, pkg))
+            rel = os.path.relpath(path, pkg)
+            src = open(path).read()
+            if pat.search(src) or (
+                rel.split(os.sep)[0] in ("streaming", "sources")
+                and checkpoint.search(src)
+            ):
+                offenders.append(rel)
     assert not offenders, (
         f"raw collect-snapshot outside _snapshot.py: {offenders}"
     )
@@ -475,3 +483,45 @@ def test_stream_drains_only_in_replay_path():
                 if pat.search(open(path).read()):
                     offenders.append(rel)
     assert not offenders, f"stream drain outside streaming/replay.py: {offenders}"
+
+
+def test_one_prefix_scan_and_one_cache_registry():
+    """The range-shuffle + broadcast-offsets prefix scan lives in
+    `two_phase_rank` and the cache registry in `operators/_util.py`.
+    ``_RANK_CACHES`` is named nowhere else in the package (callers
+    cache through ``register_cache``), and ``spark_partition_id()`` —
+    the offsets scan's partition tag — is called only in
+    `two_phase_rank` and in `pareto_frontier_skyline`, whose strict
+    prefix MAX is a different combine. A new copy of the scan belongs
+    in `two_phase_rank`."""
+    import ast
+    import os
+
+    pkg = os.path.join(os.path.dirname(__file__), "..", "target_s3_parquet_spark")
+    util = os.path.join("operators", "_util.py")
+    allowed_scans = {
+        (util, "two_phase_rank"),
+        (os.path.join("operators", "pipeline.py"), "pareto_frontier_skyline"),
+    }
+    registry, scans = [], set()
+    for root, _, files in os.walk(pkg):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(root, fn)
+            rel = os.path.relpath(path, pkg)
+            src = open(path).read()
+            if "_RANK_CACHES" in src and rel != util:
+                registry.append(rel)
+            for top in ast.parse(src).body:
+                for node in ast.walk(top):
+                    if isinstance(node, ast.Call) and "spark_partition_id" in (
+                        getattr(node.func, "attr", None),
+                        getattr(node.func, "id", None),
+                    ):
+                        scans.add((rel, getattr(top, "name", "<module>")))
+    assert not registry, f"_RANK_CACHES outside {util}: {registry}"
+    assert scans <= allowed_scans, (
+        f"spark_partition_id() offsets scan outside two_phase_rank: "
+        f"{sorted(scans - allowed_scans)}"
+    )

@@ -940,9 +940,7 @@ def test_ccnet_buckets_are_balanced_terciles(spark):
     sizes = Counter(r.bucket for r in rows)
     assert set(sizes) == {"tail", "middle", "head"}
     assert max(sizes.values()) - min(sizes.values()) <= 1
-    key = {
-        r.doc_id: r.lm_score_scaled * 16777216 + r.doc_id for r in rows
-    }
+    key = {r.doc_id: (r.lm_score_scaled, r.doc_id) for r in rows}
     hi = {b: max(key[r.doc_id] for r in rows if r.bucket == b) for b in sizes}
     lo = {b: min(key[r.doc_id] for r in rows if r.bucket == b) for b in sizes}
     assert hi["tail"] < lo["middle"] < hi["middle"] < lo["head"]

@@ -178,3 +178,32 @@ def test_bench_measure_min_failure_cleanup_and_breakdown(monkeypatch):
     assert breakdown["replayed_later"] == {
         "prep_sec": 0.0, "stream_sec": 4.0, "sink_sec": 0.0, "n_replays": 1,
     }
+
+
+def test_scaled_keys_time_each_size_with_bench_measure(monkeypatch):
+    """`run_scaled_keys` times the 1× and the scaled dir through
+    `bench.measure` with 2 runs each, and a failed run (-1.0) yields a
+    -1.0 ratio rather than a ratio of a sentinel."""
+    import bench
+    from tools import bench_scale_r10
+
+    calls = []
+    secs = {"sf": {"a": 1.0, "b": 2.0}, "sf_x10": {"a": 4.0, "b": -1.0}}
+
+    def measure(spark, sf_dir, queries, keys, runs):
+        calls.append((sf_dir, list(keys), runs))
+        return {k: secs[sf_dir][k] for k in keys}, {}
+
+    monkeypatch.setattr(bench, "measure", measure)
+    monkeypatch.setattr(bench_scale_r10, "KEYS", {"t": ["a", "b"]})
+    monkeypatch.setattr(
+        bench_scale_r10, "_materialize_scaled", lambda spark, d, f: d + "_x10"
+    )
+    out = bench_scale_r10.run_scaled_keys(None, "sf", "t", factor=10)
+
+    assert calls == [("sf", ["a", "b"], 2), ("sf_x10", ["a", "b"], 2)]
+    assert out == {
+        "factor": 10,
+        "a_1x_sec": 1.0, "a_10x_sec": 4.0, "a_ratio": 4.0,
+        "b_1x_sec": 2.0, "b_10x_sec": -1.0, "b_ratio": -1.0,
+    }

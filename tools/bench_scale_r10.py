@@ -25,7 +25,6 @@ import json
 import os
 import shutil
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -168,27 +167,24 @@ def _materialize_scaled(spark, sf_dir: str, factor: int) -> str:
 
 def run_scaled_keys(spark, sf_dir: str, which: str, factor: int = 10) -> dict:
     """Time each key of round `which` (a `KEYS` tag, or `all` of
-    them) once at 1× and once at `factor`× and record the ratio."""
-    from target_s3_parquet_spark.operators._util import release_rank_caches
+    them) at 1× and at `factor`× as `bench.measure`'s min of 2 runs
+    and record the ratio (-1.0 when a run failed). The second run of
+    each size is warm, so at small scale factors the ratio measures
+    scaling rather than the key's first-run codegen and JIT cost."""
+    from bench import measure
     from target_s3_parquet_spark.registry import get_queries
 
     keys = sum(KEYS.values(), []) if which == "all" else KEYS[which]
     queries = get_queries()
     scaled = _materialize_scaled(spark, sf_dir, factor)
+    base, _ = measure(spark, sf_dir, queries, keys, runs=2)
+    big, _ = measure(spark, scaled, queries, keys, runs=2)
     out: dict = {"factor": factor}
     for key in keys:
-        fn = queries[key]
-        times = {}
-        for tag, d in (("1x", sf_dir), (f"{factor}x", scaled)):
-            t0 = time.time()
-            fn(spark, d).count()
-            times[tag] = round(time.time() - t0, 3)
-            spark.catalog.clearCache()
-            release_rank_caches()
-        out[f"{key}_1x_sec"] = times["1x"]
-        out[f"{key}_{factor}x_sec"] = times[f"{factor}x"]
-        out[f"{key}_ratio"] = round(
-            times[f"{factor}x"] / max(times["1x"], 1e-9), 2
+        out[f"{key}_1x_sec"] = base[key]
+        out[f"{key}_{factor}x_sec"] = big[key]
+        out[f"{key}_ratio"] = (
+            round(big[key] / base[key], 2) if min(base[key], big[key]) > 0 else -1.0
         )
     return out
 

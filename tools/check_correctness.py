@@ -130,7 +130,7 @@ def main() -> int:
                     continue
             spdf = sdf.toPandas()
             # A few keys cache multi-consumer subtrees (sim_semdedup,
-            # assign_dense_ids); without this, cached relations pile up
+            # two_phase_rank); without this, cached relations pile up
             # in executor memory across a full 286-key session.
             spark.catalog.clearCache()
             release_rank_caches()
